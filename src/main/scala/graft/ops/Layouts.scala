@@ -179,7 +179,7 @@ private[graft] object Layouts {
       caller: String): Unit = {
     val layoutRoot = new org.apache.hadoop.fs.Path(path)
     val fs = layoutRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the BATCH append faces (appendIvfPq, appendNearDupIndex) write
+    // the BATCH append faces (AnnIndex.append, appendNearDupIndex) write
     // mode('append') at the layout root, staging under
     // <layout>/_temporary — an append that passed its marker check
     // before the compactor acquired is just as in-flight there as a
@@ -210,7 +210,7 @@ private[graft] object Layouts {
     * missing piece of the LSM lifecycle every rebuild/compaction
     * scaladoc ends with "the caller swaps the pointer" — this is that
     * pointer, made mechanical. Probe faces resolve a store root
-    * through it ([[Similarity.resolveLayout]]); rebuild paths swap it
+    * through it ([[AnnIndex.layout]]); rebuild paths swap it
     * INSIDE their quiesce window, so the append-lands-in-the-old-
     * generation race has no gap to land in.
     */

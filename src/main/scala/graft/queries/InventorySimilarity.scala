@@ -3,7 +3,7 @@ package graft.queries
 import graft.convert.ArchiveConverter
 import graft.core.{ConvertOptions, IncludeType}
 import graft.functions.{GraftFunctions, TextStats}
-import graft.ops.{Dedup, MultiModal, Packing, Quality, Sampling, Similarity}
+import graft.ops.{AnnIndex, Dedup, Layouts, MultiModal, Packing, Quality, Sampling, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -114,13 +114,12 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
       ivfCb, pqCb, out)
-    Similarity.ivfPqTopKAtRest(s, out, "vec_id", "code",
-      ivfCb, pqCb, OnesQuery, k = 10, nprobe = 4)
+    AnnIndex(s, out).topK(OnesQuery, k = 10, nprobe = 4)
   }
 
 
   /** INCREMENTAL maintenance of the IVF-PQ at-rest layout
-    * ([[Similarity.appendIvfPq]] — the q131 daily-ingest play for
+    * ([[graft.ops.AnnIndex.append]] — the q131 daily-ingest play for
     * vectors): the corpus (vec_id % 5 != 0) is written
     * `partitionBy(cell)` with codebooks trained on it, the increment
     * (vec_id % 5 = 0) is encoded with those SAME codebooks — no
@@ -144,13 +143,13 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     // deterministic; the append itself never touches the corpus files
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, out)
-    Similarity.appendIvfPq(incr, "vec_id", "embedding", ivfCb, pqCb, out)
-    Similarity.ivfPqTopKAtRest(s, out, "vec_id", "code",
-      ivfCb, pqCb, OnesQuery, k = 10, nprobe = 4)
+    val index = AnnIndex(s, out)
+    index.append(incr, "vec_id", "embedding")
+    index.topK(OnesQuery, k = 10, nprobe = 4)
   }
 
 
-  /** The SELF-CONTAINED at-rest probe ([[Similarity.ivfPqTopKFromFiles]]
+  /** The SELF-CONTAINED at-rest probe ([[graft.ops.AnnIndex.topK]]
     * — round 14): [[Similarity.writeIvfPqPartitioned]] persists the
     * codebooks INSIDE the layout (`_codebooks` sidecar), and the query
     * answers from the files alone — codebooks loaded back (exact
@@ -169,18 +168,17 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
       ivfCb, pqCb, out)
-    Similarity.ivfPqTopKFromFiles(s, out, "vec_id", "code",
-      OnesQuery, k = 10, nprobe = 4)
+    AnnIndex(s, out).topK(OnesQuery, k = 10, nprobe = 4)
   }
 
 
   /** COMPACTION of the appended ANN layout
-    * ([[Similarity.compactIvfPqLayout]] — the LSM small-files play):
-    * q138's corpus-write + increment-append, then the layout is
-    * compacted into a NEW path (codes rewritten one-file-per-cell,
-    * nothing re-encoded, sidecar carried) and the probe answers from
-    * the COMPACTED files alone ([[Similarity.ivfPqTopKFromFiles]] —
-    * the sidecar carry is load-bearing). Shares q138's oracle: a
+    * ([[graft.ops.AnnIndex.compact]] — the LSM small-files play):
+    * q138's corpus-write + increment-append into `gen0` of a pointered
+    * store, then the store is compacted into `gen1` (codes rewritten
+    * one-file-per-cell, nothing re-encoded, sidecar carried, pointer
+    * swapped) and the probe on the store root answers from the
+    * COMPACTED files alone (the sidecar carry is load-bearing). Shares q138's oracle: a
     * rewrite that loses, duplicates or re-cells a single code row
     * lands off the recomputed top-k.
     */
@@ -195,11 +193,11 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
-    Similarity.appendIvfPq(incr, "vec_id", "embedding", ivfCb, pqCb,
-      base + "/gen0")
-    Similarity.compactIvfPqLayout(s, base + "/gen0", base + "/gen1")
-    Similarity.ivfPqTopKFromFiles(s, base + "/gen1", "vec_id", "code",
-      OnesQuery, k = 10, nprobe = 4)
+    Layouts.swapGenerationPointer(s, base, "gen0")
+    val index = AnnIndex(s, base)
+    index.append(incr, "vec_id", "embedding")
+    index.compact()
+    index.topK(OnesQuery, k = 10, nprobe = 4)
   }
 
 
@@ -220,7 +218,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
 
 
   /** FILTERED ANN at rest ([[Similarity.writeIvfPqPartitioned]]'s
-    * `keep` + [[Similarity.ivfPqTopKAtRest]]'s `filter` — round 14):
+    * `keep` + [[graft.ops.AnnIndex.topK]]'s `filter` — round 14):
     * the layout carries a metadata column (`grp = vec_id % 4`, the
     * stand-in for language/source/license tier), and the probe asks
     * for top-k AMONG `grp = 1` rows only — the predicate evaluated on
@@ -240,8 +238,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
       ivfCb, pqCb, out, keep = Seq("grp"))
-    Similarity.ivfPqTopKAtRest(s, out, "vec_id", "code",
-      ivfCb, pqCb, OnesQuery, k = 10, nprobe = 4,
+    AnnIndex(s, out).topK(OnesQuery, k = 10, nprobe = 4,
       filter = Some(col("grp") === 1L))
   }
 
@@ -252,11 +249,10 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     * (vec_id % 5 != 0) is written with residual codes and the
     * `kind='rpq'` sidecar, the increment (vec_id % 5 = 0) is
     * residual-encoded with the SAME codebooks and appended
-    * file-additively ([[Similarity.appendIvfPqResidual]], which
-    * verifies the sidecar's rpq tables), and the probe answers from
-    * the files alone ([[Similarity.ivfPqResidualTopKFromFiles]]:
-    * per-probed-cell residual ADC tables selected by a CASE on the
-    * partition column). Write, no-retrain append, sidecar round-trip
+    * file-additively ([[graft.ops.AnnIndex.append]], which encodes
+    * with the sidecar's rpq tables), and the probe answers from the
+    * files alone ([[graft.ops.AnnIndex.topK]]: per-probed-cell
+    * residual ADC tables selected by the partition column). Write, no-retrain append, sidecar round-trip
     * and the residual-coordinate ranking are ALL load-bearing in one
     * top-k — the oracle restates the whole chain in residual
     * coordinates with codebook CTEs restricted to the corpus half
@@ -274,13 +270,13 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
       ivfCb, rcb, out)
-    Similarity.appendIvfPqResidual(incr, "vec_id", "embedding", ivfCb, rcb, out)
-    Similarity.ivfPqResidualTopKFromFiles(s, out, "vec_id", "code",
-      OnesQuery, k = 10, nprobe = 4)
+    val index = AnnIndex(s, out)
+    index.append(incr, "vec_id", "embedding")
+    index.topK(OnesQuery, k = 10, nprobe = 4)
   }
 
 
-  /** TOMBSTONES for the ANN layout ([[Similarity.compactIvfPqLayout]]'s
+  /** TOMBSTONES for the ANN layout ([[graft.ops.AnnIndex.compact]]'s
     * `dropIds` — round 15): [[graft.ops.Cdc.snapshotDiff]] classifies
     * removed ids, and compaction is where the at-rest index retires
     * them (the LSM tombstone discipline). The full corpus is written
@@ -300,16 +296,16 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
+    Layouts.swapGenerationPointer(s, base, "gen0")
     val removed = emb.where(col("vec_id") % 7 === 0).select("vec_id")
-    Similarity.compactIvfPqLayout(s, base + "/gen0", base + "/gen1",
-      dropIds = Some(removed), idCol = "vec_id")
-    Similarity.ivfPqTopKFromFiles(s, base + "/gen1", "vec_id", "code",
-      OnesQuery, k = 10, nprobe = 4)
+    val index = AnnIndex(s, base)
+    index.compact(dropIds = Some(removed))
+    index.topK(OnesQuery, k = 10, nprobe = 4)
   }
 
 
   /** QUANTIZATION-DRIFT metric ([[Similarity.quantizationDrift]] —
-    * round 17): the number behind [[Similarity.appendIvfPq]]'s
+    * round 17): the number behind [[graft.ops.AnnIndex.append]]'s
     * "rebuild cadence is the caller's policy". Codebooks (coarse, raw
     * PQ and residual PQ — the q132/q148 deterministic stand-ins) are
     * built on the corpus half (vec_id % 5 != 0), and the report is
@@ -354,7 +350,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
   }
 
 
-  /** DRIFT-GATED maintenance ([[Similarity.maintainIvfPq]] — the q140
+  /** DRIFT-GATED maintenance ([[graft.ops.AnnIndex.maintain]] — the q140
     * incremental-refresh play for vectors, composing q138's append
     * with q151's drift metric into the append-or-rebuild decision
     * FAISS leaves to the caller): both regimes demonstrated against
@@ -404,7 +400,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
           .foreach(java.nio.file.Files.deleteIfExists(_))
       }
     }
-    Seq("/ckpt", "/layout/" + graft.ops.Layouts.IncrementsDir)
+    Seq("/ckpt", "/layout/" + Layouts.IncrementsDir)
       .foreach(sfx => rm(base + sfx))
     val fixturesOk = new java.io.File(base + "/_fixtures_ok")
     if (!fixturesOk.exists()) {
@@ -443,8 +439,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       require(done,
         "q157: the availableNow stream did not terminate within 300 s")
     }
-    Similarity.ivfPqTopKFromFilesWithIncrements(s, base + "/layout",
-      "vec_id", "code", OnesQuery, k = 10, nprobe = 4)
+    AnnIndex(s, base + "/layout").topK(OnesQuery, k = 10, nprobe = 4)
   }
 
 
@@ -462,12 +457,14 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       new java.io.File(System.getProperty("java.io.tmpdir"), "graft_q156_layout"),
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     // ONE corpus generation serves both regimes: the drift regime runs
-    // first (its rebuild writes a NEW generation and leaves gen0
-    // untouched), then the in-distribution regime appends into gen0 as
-    // its last use (overwrite-on-rerun keeps the whole query
-    // deterministic)
+    // first (its rebuild writes gen1, swaps the pointer and leaves gen0
+    // untouched), then the pointer goes back to gen0 and the
+    // in-distribution regime appends into it as its last use
+    // (overwrite-on-rerun keeps the whole query deterministic)
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
+    Layouts.swapGenerationPointer(s, base, "gen0")
+    val index = AnnIndex(s, base)
     // the corpus argument is consumed ONLY by the rebuild path's
     // retrain-and-rewrite, and q156's oracle pins the DECISION terms
     // (action, stored_err, fresh_err — none depend on it); the full
@@ -475,10 +472,9 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     // drift regime a narrow slice and keeps the sweep cost on the
     // decision it actually proves (round-19 trim, VERDICT r18 #6)
     val slice = corpus.where(col("vec_id") % 50 === 1)
-    val rb = Similarity.maintainIvfPq(s, base + "/gen0", slice, drifted,
-      "vec_id", "embedding", base + "/rebuilt")
-    val ra = Similarity.maintainIvfPq(s, base + "/gen0", corpus, indist,
-      "vec_id", "embedding", base + "/unused")
+    val rb = index.maintain(slice, drifted, "vec_id", "embedding")
+    Layouts.swapGenerationPointer(s, base, "gen0")
+    val ra = index.maintain(corpus, indist, "vec_id", "embedding")
     def r6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     Seq(("indist", ra.action, r6(ra.storedErr), r6(ra.freshErr)),
@@ -488,7 +484,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
   }
 
 
-  /** [[Similarity.maintainIvfPq]]'s REBUILD PATH at production
+  /** [[graft.ops.AnnIndex.maintain]]'s REBUILD PATH at production
     * geometry (q156 pins the decision; this seat pins the retrain +
     * generation swap end-to-end at nlist=16, multi-cell): the drifted
     * batch keeps its ORIGINAL ids (vec_id % 5 = 0, +4.0 per
@@ -521,18 +517,17 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     // pointer INSIDE its quiesce window, and the probe below addresses
     // the ROOT — answering from the new generation purely through the
     // pointer, with no path handed across the swap by hand
-    graft.ops.Layouts.swapGenerationPointer(s, base, "gen0")
-    val r = Similarity.maintainPointedIvfPq(s, base, corpus, drifted,
-      "vec_id", "embedding")
+    Layouts.swapGenerationPointer(s, base, "gen0")
+    val index = AnnIndex(s, base)
+    val r = index.maintain(corpus, drifted, "vec_id", "embedding")
     require(r.action == "rebuild" && r.layout == base + "/gen1",
       s"q158 expects the drifted batch to trigger the rebuild path, got $r")
-    Similarity.ivfPqTopKFromFiles(s, base, "vec_id", "code",
-      OnesQuery, k = 10, nprobe = 4)
+    index.topK(OnesQuery, k = 10, nprobe = 4)
   }
 
 
   /** The COMPOSED maintenance loop
-    * ([[Similarity.maintainFromDriftSeries]] — the monitoring job that
+    * ([[graft.ops.AnnIndex.maintainFromDriftSeries]] — the monitoring job that
     * closes q156 + q157 into one lifecycle): four micro-batches land
     * through the streaming ingest face, each writing its one-row
     * drift report; the monitor then thresholds median-of-last-2
@@ -558,10 +553,11 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     // any prior run's increments wholesale
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
-    graft.ops.Layouts.delete(s, base + "/drift")
+    Layouts.delete(s, base + "/drift")
     // the monitor refuses to overwrite an existing rebuild target (a
     // crashed-rebuild guard); a rerun is a fresh lifecycle, so clear it
-    graft.ops.Layouts.delete(s, base + "/gen1")
+    Layouts.delete(s, base + "/gen1")
+    Layouts.swapGenerationPointer(s, base, "gen0")
     def shifted(mod: Long, off: Double, idOff: Long) =
       emb.where(col("vec_id") % 10 === mod)
         .select((col("vec_id") + idOff).as("vec_id"),
@@ -571,11 +567,10 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       shifted(0L, 4.0, 10000L), shifted(5L, 4.0, 20000L))  // drifted
     batches.zipWithIndex.foreach { case (b, i) =>
       graft.streaming.StreamingSimilarity.ingestBatch(b, i.toLong,
-        base + "/gen0", "vec_id", "embedding", Some(base + "/drift"))
+        base, "vec_id", "embedding", Some(base + "/drift"))
     }
-    val r = Similarity.maintainFromDriftSeries(s, base + "/drift",
-      base + "/gen0", emb, "vec_id", "embedding", base + "/gen1",
-      window = 2)
+    val r = AnnIndex(s, base).maintainFromDriftSeries(base + "/drift",
+      emb, "vec_id", "embedding", window = 2)
     def r6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     Seq((r.action, r6(r.baselineErr), r6(r.trailingErr), r.batches))
@@ -583,7 +578,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
   }
 
 
-  /** MULTI-QUERY batched ANN ([[Similarity.ivfPqTopKBatchFromFiles]]
+  /** MULTI-QUERY batched ANN ([[graft.ops.AnnIndex.topK]]
     * — round 19, the offline-retrieval shape): two query vectors with
     * DISJOINT probe sets (all-ones and all-minus-ones — opposite
     * cosine orderings over the coarse centroids, so the probe picks
@@ -605,14 +600,14 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
       ivfCb, pqCb, base + "/layout")
     val qs = Seq(1L -> OnesQuery, 2L -> Array.fill(64)(-1.0))
-    Similarity.ivfPqTopKBatchFromFiles(s, base + "/layout", "vec_id", "code",
-      qs, k = 5, nprobe = 4)
+    AnnIndex(s, base + "/layout")
+      .topK(qs, k = 5, nprobe = 4, excludeBatchId = None)
       .orderBy(col("query_id"), col("adc"), col("vec_id"))
   }
 
 
   /** KIND-AWARE, INCREMENTS-AWARE batched probe (round 20 —
-    * [[Similarity.ivfPqResidualTopKBatchFromFilesWithIncrements]]):
+    * [[graft.ops.AnnIndex.topK]] over a residual layout):
     * q160's two-query offline-retrieval chain in RESIDUAL coordinates
     * over a layout holding committed STREAMING increments. The corpus
     * (vec_id % 5 != 0) is written residual-encoded; the % 5 == 0
@@ -647,8 +642,8 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
         "vec_id", "embedding", None)
     }
     val qs = Seq(1L -> OnesQuery, 2L -> Array.fill(64)(-1.0))
-    Similarity.ivfPqResidualTopKBatchFromFilesWithIncrements(s,
-      base + "/layout", "vec_id", "code", qs, k = 5, nprobe = 4)
+    AnnIndex(s, base + "/layout")
+      .topK(qs, k = 5, nprobe = 4, excludeBatchId = None)
   }
 
 
@@ -682,7 +677,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
 
 
   /** ADC shortlist + EXACT RE-RANK (round 20 —
-    * [[Similarity.ivfPqTopKRefined]], the FAISS IndexRefineFlat
+    * [[graft.ops.AnnIndex.refine]], the FAISS IndexRefineFlat
     * pattern and the answer to the PQ ranking loss q162 measures):
     * the layout carries the full-precision vectors (`keep`), the
     * probe shortlists 40 candidates by ADC inside the probed cells,
@@ -702,7 +697,7 @@ private[queries] trait InventorySimilarity extends InventoryDedup {
       java.lang.Integer.toHexString(d.hashCode)).getAbsolutePath
     Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
       ivfCb, pqCb, base + "/layout", keep = Seq("embedding"))
-    Similarity.ivfPqTopKRefined(s, base + "/layout", "vec_id", "code",
-      "embedding", OnesQuery, k = 10, shortlist = 40, nprobe = 4)
+    AnnIndex(s, base + "/layout")
+      .refine(OnesQuery, k = 10, vecCol = "embedding", shortlist = 40, nprobe = 4)
   }
 }

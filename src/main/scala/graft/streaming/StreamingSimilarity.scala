@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Similarity
+import graft.ops.AnnIndex
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -10,10 +10,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * is encoded with the layout's STORED codebooks (read back from the
   * `_codebooks` sidecar — nothing retrained, nothing handed over out
   * of band) and appended into the at-rest IVF-PQ layout, so probes
-  * over base + increments ([[graft.ops.Similarity.ivfPqTopKFromFilesWithIncrements]] /
-  * [[graft.ops.Similarity.ivfPqResidualTopKFromFilesWithIncrements]])
-  * see yesterday's stream batches exactly as [[graft.ops.Similarity.appendIvfPq]] /
-  * [[graft.ops.Similarity.appendIvfPqResidual]] batches. KIND-AWARE:
+  * over base + increments ([[graft.ops.AnnIndex.topK]]) see
+  * yesterday's stream batches exactly as hand-driven
+  * [[graft.ops.AnnIndex.append]] batches. KIND-AWARE:
   * the sidecar's 'pq'/'rpq' tag picks the encoder per batch, so the
   * same stream code serves raw and residual layouts and can never
   * poison one with the other's codes.
@@ -21,19 +20,19 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * Exactly-once story, inherited from the near-dup loop: every
   * per-batch write is IDEMPOTENT — the batch owns
   * `_increments/ingest_batch=<id>` inside the layout
-  * ([[graft.ops.Similarity.appendIvfPqIncrement]], overwritten
+  * ([[graft.ops.AnnIndex.append]] with the batch id, overwritten
   * wholesale on a crash-replay), so plain parquet converges without a
   * transactional table format, and a duplicated code row (which would
   * surface the same id twice in a top-k) cannot survive a replay.
-  * [[graft.ops.Similarity.compactIvfPqLayout]] folds the increments
-  * into the next base generation (quiesce the stream first).
+  * [[graft.ops.AnnIndex.compact]] folds the increments into the next
+  * base generation, holding the quiesce marker the stream refuses on.
   *
   * `driftOut` composes the rebuild signal in: when set, each batch
   * also writes its one-row drift report — mean ADC reconstruction
   * error of the BATCH under the stored codebooks
   * ([[graft.ops.Similarity.ivfPqDistortion]]) — to
   * `driftOut/ingest_batch=<id>` (idempotent, same discipline). The
-  * monitoring job is [[graft.ops.Similarity.maintainFromDriftSeries]]:
+  * monitoring job is [[graft.ops.AnnIndex.maintainFromDriftSeries]]:
   * it thresholds the trailing window of that series against the
   * leading one and triggers the corpus-wide rebuild under the
   * layout's quiesce marker; the stream itself never rebuilds (a
@@ -71,8 +70,7 @@ object StreamingSimilarity {
     // swap encodes with (and reports drift against) the NEW
     // generation's codebooks automatically
     ingestBatchResolved(b, batchId, layoutPath,
-      Similarity.resolveLayout(b.sparkSession, layoutPath),
-      idCol, vecCol, driftOut)
+      AnnIndex(b.sparkSession, layoutPath).layout, idCol, vecCol, driftOut)
 
   /** [[ingestBatch]] with the generation resolution split out — the
     * seam that lets the post-write pointer fence below be pinned
@@ -89,28 +87,25 @@ object StreamingSimilarity {
       driftOut: Option[String]): Unit = {
     val spark = b.sparkSession
     // fail BEFORE the encode while a compaction holds the layout's
-    // quiesce marker (appendIvfPqIncrement refuses too — this check
+    // quiesce marker (AnnIndex.append refuses too — this check
     // just moves the curated failure ahead of the work): the
     // checkpoint replays the batch after the fold
     graft.ops.Layouts.assertNotQuiesced(spark, layout,
       "incrementalAnnStream")
-    Similarity.appendIvfPqIncrement(b, idCol, vecCol, layout, batchId)
+    // `layout` is a generation directory, so the handle resolves it
+    // to itself: encode and drift report use the generation resolved
+    // above even if the pointer moves meanwhile (the fence below)
+    val index = AnnIndex(spark, layout)
+    index.append(b, idCol, vecCol, Some(batchId))
     driftOut.foreach { out =>
       // kind-aware like the append itself: a residual layout's drift
       // is its residual reconstruction error, not the raw-PQ one
-      val err = Similarity.sidecarPqKind(spark, layout) match {
-        case "rpq" =>
-          val (ivfCb, rcb) = Similarity.readIvfPqResidualCodebooks(spark, layout)
-          Similarity.ivfPqDistortion(b, vecCol, ivfCb, rcb, residual = true)
-        case _ =>
-          val (ivfCb, pqCb) = Similarity.readIvfPqCodebooks(spark, layout)
-          Similarity.ivfPqDistortion(b, vecCol, ivfCb, pqCb, residual = false)
-      }
+      val err = index.codebooks.distortion(b, vecCol)
       // the batch id lives in the DIRECTORY (the verdicts convention:
       // a read of `out` surfaces it as the ingest_batch partition
       // column) — writing it as a data column too would collide with
       // the discovered partition column on read. Driver-side write:
-      // one double the driver just collected (ivfPqDistortion) — a
+      // one double the driver just collected (the distortion) — a
       // Spark job per report was pure per-batch scheduler tax.
       graft.ops.Layouts.writeSidecar(spark,
         graft.ops.Layouts.ownedBatchDir(out, batchId),
@@ -129,7 +124,7 @@ object StreamingSimilarity {
     // re-encodes there, and the rows written into the superseded
     // generation are never read again (its probes ended at the swap;
     // vacuumGenerations reclaims it).
-    if (Similarity.resolveLayout(spark, layoutPath) != layout)
+    if (AnnIndex(spark, layoutPath).layout != layout)
       throw new IllegalStateException(
         s"incrementalAnnStream: the generation pointer under $layoutPath " +
           s"moved off $layout while batch $batchId was encoding (a " +
@@ -147,7 +142,7 @@ object StreamingSimilarity {
       availableNow: Boolean = true): DataStreamWriter[Row] = {
     require(batches.isStreaming,
       "incrementalAnnStream takes a STREAMING frame; the batch face is " +
-        "Similarity.appendIvfPq / maintainIvfPq")
+        "AnnIndex.append / AnnIndex.maintain")
     // the batch is consumed twice when driftOut is set (encode +
     // distortion): the shared shell materializes it once
     IncrementalIngest.ownedBatchWriter(batches, Seq(idCol, vecCol),

@@ -43,10 +43,19 @@ object CheckpointShims {
     // size/rowcount stats carry over (attribute-keyed column stats are
     // dropped rather than rewritten — sizeInBytes is what join-strategy
     // selection reads; without it the LogicalRDD defaults to "huge" and
-    // a broadcast-worthy side silently turns into a sort-merge join)
+    // a broadcast-worthy side silently turns into a sort-merge join).
+    // The optimizer's size can sit orders of magnitude below the truth
+    // (an explode multiplies rows its estimate never sees), so it is
+    // floored by the bytes the count above actually materialized, read
+    // from the driver's block status: no job, and only ever raising the
+    // size, so a frame can lose broadcast eligibility, never gain it.
     val optStats = ds.queryExecution.optimizedPlan.stats
+    val materialized = session.sparkContext
+      .getRDDStorageInfo(_.id == internalRdd.id)
+      .map(i => BigInt(i.memSize) + BigInt(i.diskSize)).sum
     val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
-      sizeInBytes = optStats.sizeInBytes, rowCount = optStats.rowCount)
+      sizeInBytes = optStats.sizeInBytes.max(materialized),
+      rowCount = optStats.rowCount)
     Dataset.ofRows(session,
       LogicalRDD(output, internalRdd, partitioning, Nil,
         isStreaming = false)(session, originStats = Some(stats)))

@@ -18,45 +18,56 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
   * split math: [[FilePartition.maxSplitBytes]] plus the
   * Next-Fit-Decreasing packing of `FilePartition.getFilePartitions`
   * over split lengths. Any other plan shape returns None and the
-  * caller falls back to the planning probe. Parity with the planner is
-  * pinned in OpsSpec ("fanOutByKey width estimate").
+  * caller falls back to the planning probe, and so do three shapes the
+  * replay does not model: a partitioned relation under a Filter (the
+  * unpruned listing would count pruned partitions), a bucketed
+  * relation (one partition per bucket, not per split) and a
+  * non-positive split size (the planner's own split loop cannot step
+  * by it). Parity with the planner is pinned in OpsSpec ("fanOutByKey
+  * width estimate").
   */
 object ScanWidth {
 
   def estimate(df: DataFrame): Option[Int] = {
     @annotation.tailrec
-    def rel(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+    def rel(p: LogicalPlan, filtered: Boolean): Option[HadoopFsRelation] = p match {
       case l: LogicalRelation =>
         l.relation match {
-          case h: HadoopFsRelation => Some(h)
+          case h: HadoopFsRelation if h.bucketSpec.isEmpty &&
+              !(filtered && h.partitionSchema.nonEmpty) => Some(h)
           case _ => None
         }
-      case _: Project | _: Filter | _: SubqueryAlias => rel(p.children.head)
+      case f: Filter => rel(f.child, filtered = true)
+      case _: Project | _: SubqueryAlias => rel(p.children.head, filtered)
       case _ => None
     }
-    rel(df.queryExecution.analyzed).map { r =>
+    rel(df.queryExecution.analyzed, filtered = false).flatMap { r =>
       val spark = df.sparkSession
       val lens = r.location.listFiles(Nil, Nil).flatMap(_.files).map(_.getLen)
       val openCost = spark.sessionState.conf.filesOpenCostInBytes
       val totalBytes: Long = lens.map(_ + openCost).sum
       val maxSplit: Long = FilePartition.maxSplitBytes(spark, totalBytes)
-      // parquet is splitable: every file splits at maxSplit boundaries,
-      // splits sort by length descending, then Next-Fit-Decreasing
-      // packing charges openCost per split on top of its length
-      val splits = lens.iterator.flatMap { len =>
-        (0L until len by maxSplit).map(o => math.min(maxSplit, len - o))
-      }.toArray
-      java.util.Arrays.sort(splits)
-      var nParts = 0
-      var cur = 0L
-      var i = splits.length - 1
-      while (i >= 0) {
-        val len = splits(i)
-        if (nParts == 0 || cur + len > maxSplit) { nParts += 1; cur = 0L }
-        cur += len + openCost
-        i -= 1
-      }
-      math.max(nParts, 1)
+      if (maxSplit <= 0) None else Some(packedWidth(lens, maxSplit, openCost))
     }
+  }
+
+  private def packedWidth(lens: Seq[Long], maxSplit: Long, openCost: Long): Int = {
+    // parquet is splitable: every file splits at maxSplit boundaries,
+    // splits sort by length descending, then Next-Fit-Decreasing
+    // packing charges openCost per split on top of its length
+    val splits = lens.iterator.flatMap { len =>
+      (0L until len by maxSplit).map(o => math.min(maxSplit, len - o))
+    }.toArray
+    java.util.Arrays.sort(splits)
+    var nParts = 0
+    var cur = 0L
+    var i = splits.length - 1
+    while (i >= 0) {
+      val len = splits(i)
+      if (nParts == 0 || cur + len > maxSplit) { nParts += 1; cur = 0L }
+      cur += len + openCost
+      i -= 1
+    }
+    math.max(nParts, 1)
   }
 }

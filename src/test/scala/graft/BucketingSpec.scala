@@ -118,10 +118,15 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("id", "vec")
     val book = Similarity.trainIvfCodebook(docs, "id", "vec", nlist = 4)
     val out = java.nio.file.Files.createTempDirectory("graft_ivf_trained").toString
-    Similarity.writeIvfPartitioned(docs, "vec", book, out)
+    docs.withColumn("cell", Similarity.ivfCell(book, col("vec")))
+      .write.mode("overwrite").partitionBy("cell").parquet(out)
 
     val query = centers(2).map(_ + 0.01)
-    val got = Similarity.ivfTopKAtRest(spark, out, "id", "vec", book, query, k = 5, nprobe = 1)
+    val got = spark.read.parquet(out)
+      .where(col("cell").isin(Similarity.ivfProbed(book, query, nprobe = 1): _*))
+      .select(col("id"), round(Similarity.cosineTo(col("vec"), query), 6).as("cos"))
+      .orderBy(col("cos").desc, col("id"))
+      .limit(5)
     // pruned plan: exactly 1 of 4 cell directories scanned
     val scan = got.queryExecution.executedPlan.collectFirst {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
@@ -137,7 +142,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("CDX layout: shard-partitioned, surt-sorted index prunes a domain scan") {
     // the q113 claim made concrete — the 100 TB CDX at-rest layout is
     // partitionBy(key shard) + sortWithinPartitions(cdx_key) (the
-    // writeIvfPartitioned pattern): a domain scan prunes to ONE
+    // IVF cell-partitioned pattern): a domain scan prunes to ONE
     // partition directory at plan time, and the finer prefix filter
     // pushes to the parquet reader for row-group skipping inside it
     import org.apache.spark.sql.functions._
@@ -172,7 +177,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("increments probe prunes cell directories across base AND streamed increments") {
-    import graft.ops.Similarity
+    import graft.ops.{AnnIndex, Similarity}
     import spark.implicits._
     val dim = 8
     def vecs(r: Range) = r.map { i =>
@@ -185,11 +190,10 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toString + "/layout"
     Similarity.writeIvfPqPartitioned(docs, "vec_id", "embedding",
       cents, pqCb, out)
-    Similarity.appendIvfPqIncrement(vecs(100 until 132).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", out, 0L)
+    AnnIndex(spark, out).append(vecs(100 until 132).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", batchId = Some(0L))
     val query = Array.fill(dim)(0.7)
-    val probe = Similarity.ivfPqTopKFromFilesWithIncrements(spark, out,
-      "vec_id", "code", query, k = 5, nprobe = 2)
+    val probe = AnnIndex(spark, out).topK(query, k = 5, nprobe = 2)
     assert(probe.count() == 5)
     // the 100 TB property holds on BOTH sides of the union: the probe
     // predicate pushes into the base layout and into every increment

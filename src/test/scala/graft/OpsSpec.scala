@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{GraftFunctions, TextStats}
-import graft.ops.{Dedup, Layouts, Quality, Similarity}
+import graft.ops.{AnnIndex, Dedup, Layouts, Quality, Similarity}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -433,7 +433,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(p => b.relativize(p).toString).toSet
     }
     val before = dataFiles()
-    Similarity.appendIvfPq(incr, "vec_id", "embedding", ivfCb, pqCb, out)
+    AnnIndex(spark, out).append(incr, "vec_id", "embedding")
     val after = dataFiles()
     // the append only ADDS files — every corpus file survives by name
     // (the corpus side is never read or rewritten)
@@ -444,8 +444,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ADC ranking a from-scratch batch encode of the UNION produces
     assert(spark.read.parquet(out).count() == 150)
     val query = Array.fill(dim)(0.5)
-    val gotRest = Similarity.ivfPqTopKAtRest(spark, out, "vec_id", "code",
-      ivfCb, pqCb, query, k = 10, nprobe = 3)
+    val gotRest = AnnIndex(spark, out).topK(query, k = 10, nprobe = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     val gotBatch = Similarity.ivfPqTopK(
       corpus.unionByName(incr), "vec_id", "embedding", query,
@@ -497,15 +496,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, m = 4, ks = 8)
     val base = java.nio.file.Files.createTempDirectory("graft_res_atrest").toString
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, rcb, base + "/inc")
-    Similarity.appendIvfPqResidual(incr, "vec_id", "embedding", ivfCb, rcb,
-      base + "/inc")
+      ivfCb, rcb, base + "/inc/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/inc", "gen0")
+    AnnIndex(spark, base + "/inc").append(incr, "vec_id", "embedding")
     Similarity.writeIvfPqResidualPartitioned(full, "vec_id", "embedding",
       ivfCb, rcb, base + "/full")
     val query = Array.fill(dim)(0.5)
     def probe(p: String): Seq[(Long, Double)] =
-      Similarity.ivfPqResidualTopKFromFiles(spark, p, "vec_id", "code",
-        query, k = 10, nprobe = 3)
+      AnnIndex(spark, p).topK(query, k = 10, nprobe = 3)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // no-retrain append == full rewrite with the same codebooks, exactly
     assert(probe(base + "/inc") == probe(base + "/full"))
@@ -523,9 +521,12 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     atRest.zip(inFlight).foreach { case ((_, a), (_, b)) =>
       assert(math.abs(a - b) < 1e-9, s"$a vs $b")
     }
-    // compaction carries the rpq sidecar verbatim
-    Similarity.compactIvfPqLayout(spark, base + "/inc", base + "/gen1")
-    assert(probe(base + "/gen1") == probe(base + "/inc"))
+    // compaction carries the rpq sidecar: the root probe answers
+    // identically from the compacted generation
+    val beforeFold = probe(base + "/inc")
+    assert(AnnIndex(spark, base + "/inc").compact() == base + "/inc/gen1")
+    assert(AnnIndex(spark, base + "/inc").codebooks.kind == "rpq")
+    assert(probe(base + "/inc") == beforeFold)
   }
 
   test("tombstones: a retired id never resurfaces, even unfiltered on the corpus side") {
@@ -540,13 +541,12 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = java.nio.file.Files.createTempDirectory("graft_tombstone").toString
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
+    Layouts.swapGenerationPointer(spark, base, "gen0")
+    val index = AnnIndex(spark, base)
     val query = Array.fill(dim)(0.5)
-    val top1 = Similarity.ivfPqTopKFromFiles(spark, base + "/gen0",
-      "vec_id", "code", query, k = 1, nprobe = 3).collect()(0).getLong(0)
-    Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/gen1",
-      dropIds = Some(Seq(top1).toDF("vec_id")), idCol = "vec_id")
-    val after = Similarity.ivfPqTopKFromFiles(spark, base + "/gen1",
-      "vec_id", "code", query, k = 10, nprobe = 3)
+    val top1 = index.topK(query, k = 1, nprobe = 3).collect()(0).getLong(0)
+    index.compact(dropIds = Some(Seq(top1).toDF("vec_id")))
+    val after = index.topK(query, k = 10, nprobe = 3)
       .collect().map(_.getLong(0)).toSet
     assert(!after.contains(top1), s"retired vec $top1 still ranked")
     assert(spark.read.parquet(base + "/gen1").count() == 119)
@@ -589,28 +589,50 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding",
       ivfCb, pqCb, base + "/raw")
     val query = Array.fill(dim)(0.5)
-    // a raw probe of a residual layout would ADC residual codes
-    // through raw tables — silent garbage; the tag refuses instead
-    val e1 = intercept[IllegalStateException] {
-      Similarity.ivfPqTopKFromFiles(spark, base + "/res", "vec_id", "code",
-        query, k = 5)
-    }
-    assert(e1.getMessage.contains("RESIDUAL"), e1.getMessage)
-    assert(e1.getMessage.contains("kinds present"), e1.getMessage)
-    val e2 = intercept[IllegalStateException] {
-      Similarity.ivfPqResidualTopKFromFiles(spark, base + "/raw", "vec_id",
-        "code", query, k = 5)
-    }
-    assert(e2.getMessage.contains("raw-PQ"), e2.getMessage)
-    // and appends can't poison across encodings either
+    // the sidecar's tag picks the ADC tables: each layout ranks exactly
+    // as the in-flight encoder of ITS kind (residual codes ranked
+    // through raw tables, or vice versa, would be silent garbage)
+    def ids(d: org.apache.spark.sql.DataFrame): Seq[Long] =
+      d.collect().map(_.getLong(0)).toSeq
+    assert(AnnIndex(spark, base + "/res").codebooks.kind == "rpq")
+    assert(AnnIndex(spark, base + "/raw").codebooks.kind == "pq")
+    assert(ids(AnnIndex(spark, base + "/res").topK(query, k = 5, nprobe = 2)) ==
+      ids(Similarity.ivfPqResidualTopK(df, "vec_id", "embedding", query, k = 5,
+        nlist = 4, nprobe = 2, m = 4, ks = 8,
+        ivfCb = Some(ivfCb), residualCb = Some(rcb))))
+    assert(ids(AnnIndex(spark, base + "/raw").topK(query, k = 5, nprobe = 2)) ==
+      ids(Similarity.ivfPqTopK(df, "vec_id", "embedding", query, k = 5,
+        nlist = 4, nprobe = 2, m = 4, ks = 8,
+        ivfCb = Some(ivfCb), pqCb = Some(pqCb))))
+    // appends can't poison across encodings: the same batch lands as
+    // residual codes in one layout and raw codes in the other, each
+    // equal to a fresh write of that kind
     val batch = Seq((200L, Array.fill(dim)(0.1f))).toDF("vec_id", "embedding")
-    intercept[IllegalStateException] {
-      Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, pqCb,
-        base + "/res")
+    AnnIndex(spark, base + "/res").append(batch, "vec_id", "embedding")
+    AnnIndex(spark, base + "/raw").append(batch, "vec_id", "embedding")
+    Similarity.writeIvfPqResidualPartitioned(batch, "vec_id", "embedding",
+      ivfCb, rcb, base + "/res_ref")
+    Similarity.writeIvfPqPartitioned(batch, "vec_id", "embedding",
+      ivfCb, pqCb, base + "/raw_ref")
+    def codeOf(p: String): Seq[Int] = spark.read.parquet(p)
+      .where(col("vec_id") === 200L).select("code").as[Seq[Int]].head()
+    assert(codeOf(base + "/res") == codeOf(base + "/res_ref"))
+    assert(codeOf(base + "/raw") == codeOf(base + "/raw_ref"))
+    // a sidecar holding BOTH kinds is ambiguous: refused, never a
+    // silent pick of one encoder
+    Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding",
+      ivfCb, pqCb, base + "/both")
+    spark.read.parquet(base + "/raw/_codebooks")
+      .unionByName(spark.read.parquet(base + "/res/_codebooks")
+        .where(col("kind") === "rpq"))
+      .coalesce(1).write.mode("overwrite").parquet(base + "/both/_codebooks")
+    val e1 = intercept[IllegalStateException] {
+      AnnIndex(spark, base + "/both").topK(query, k = 5)
     }
+    assert(e1.getMessage.contains("BOTH"), e1.getMessage)
+    assert(e1.getMessage.contains("kinds present"), e1.getMessage)
     intercept[IllegalStateException] {
-      Similarity.appendIvfPqResidual(batch, "vec_id", "embedding", ivfCb, rcb,
-        base + "/raw")
+      AnnIndex(spark, base + "/both").append(batch, "vec_id", "embedding")
     }
   }
 
@@ -625,14 +647,18 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = java.nio.file.Files.createTempDirectory("graft_compact").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
+    Layouts.swapGenerationPointer(spark, base, "gen0")
+    val index = AnnIndex(spark, base)
     // three daily appends -> small-file sprawl in the touched cells
     Seq(0, 1, 2).foreach { day =>
       val batch = rows.filter(t => t._1 % 5 == 0 && t._1 % 3 == day)
         .toDF("vec_id", "embedding")
-      Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, pqCb,
-        base + "/gen0")
+      index.append(batch, "vec_id", "embedding")
     }
-    Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/gen1")
+    val q = Array.fill(dim)(0.5)
+    val g0 = index.topK(q, k = 5, nprobe = 3).collect().map(_.getLong(0)).toSeq
+    assert(index.compact() == base + "/gen1")
+    assert(index.layout == base + "/gen1")
     def filesPerCell(p: String): Map[String, Int] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(p)).iterator().asScala
@@ -649,11 +675,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("vec_id", "cell").as[(Long, Long)].collect().sorted.toSeq
     assert(before == after)
     // sidecar carried: the self-contained probe works on gen1
-    val q = Array.fill(dim)(0.5)
-    val g1 = Similarity.ivfPqTopKFromFiles(spark, base + "/gen1", "vec_id", "code",
-      q, k = 5, nprobe = 3).collect().map(_.getLong(0)).toSeq
-    val g0 = Similarity.ivfPqTopKAtRest(spark, base + "/gen0", "vec_id", "code",
-      ivfCb, pqCb, q, k = 5, nprobe = 3).collect().map(_.getLong(0)).toSeq
+    val g1 = index.topK(q, k = 5, nprobe = 3).collect().map(_.getLong(0)).toSeq
     assert(g1 == g0, s"gen1 $g1 vs gen0 $g0")
   }
 
@@ -669,7 +691,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .resolve("layout").toString
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding", ivfCb, pqCb, out)
     // exact double round-trip: loaded codebooks reproduce the written
-    val (li, lp) = Similarity.readIvfPqCodebooks(spark, out)
+    val AnnIndex.Codebooks(kind, li, lp) = AnnIndex(spark, out).codebooks
+    assert(kind == "pq")
     assert(li.length == ivfCb.length && li.zip(ivfCb).forall {
       case ((ia, va, na), (ib, vb, nb)) =>
         ia == ib && na == nb && va.sameElements(vb) })
@@ -679,23 +702,23 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(out).count() == 120)
     // self-contained probe == explicit-codebook probe
     val query = Array.fill(dim)(0.5)
-    val fromFiles = Similarity.ivfPqTopKFromFiles(spark, out, "vec_id", "code",
-      query, k = 10, nprobe = 3).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val explicit = Similarity.ivfPqTopKAtRest(spark, out, "vec_id", "code",
-      ivfCb, pqCb, query, k = 10, nprobe = 3)
+    val fromFiles = AnnIndex(spark, out).topK(query, k = 10, nprobe = 3).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val explicit = Similarity.ivfPqTopK(df, "vec_id", "embedding", query,
+      k = 10, nlist = 8, nprobe = 3, m = 4, ks = 8,
+      ivfCb = Some(ivfCb), pqCb = Some(pqCb))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(fromFiles == explicit, s"$fromFiles vs $explicit")
-    // appending with DIFFERENT codebooks fails fast, naming the hazard
-    val otherPq = Similarity.pqCodebooks(
-      df.where(col("vec_id") >= 50L), "vec_id", "embedding", m = 4, ks = 8)
+    // the append guard holds by construction: a batch is encoded with
+    // the STORED tables, never a caller's — its code equals the one a
+    // fresh write with the written codebooks assigns
     val batch = Seq((200L, Array.fill(dim)(0.1f))).toDF("vec_id", "embedding")
-    val e = intercept[IllegalArgumentException] {
-      Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, otherPq, out)
-    }
-    assert(e.getMessage.contains("mis-cells"), e.getMessage)
-    // matching codebooks append fine
-    Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, pqCb, out)
+    AnnIndex(spark, out).append(batch, "vec_id", "embedding")
     assert(spark.read.parquet(out).count() == 121)
+    Similarity.writeIvfPqPartitioned(batch, "vec_id", "embedding", ivfCb, pqCb,
+      out + "_ref")
+    def row200(p: String) = spark.read.parquet(p).where(col("vec_id") === 200L)
+      .select("cell", "code").as[(Long, Seq[Int])].head()
+    assert(row200(out) == row200(out + "_ref"))
   }
 
   test("Quality.dataCard: one row per source, corpus-wide dup exposure") {
@@ -1268,35 +1291,41 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(df, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(df, "vec_id", "embedding", m = 2, ks = 4)
-    val out = java.nio.file.Files.createTempDirectory("graft_cb_empty").toString + "/layout"
+    val root = java.nio.file.Files.createTempDirectory("graft_cb_empty").toString
+    val out = root + "/gen0"
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding", ivfCb, pqCb, out)
+    Layouts.swapGenerationPointer(spark, root, "gen0")
     val cbDir = java.nio.file.Paths.get(out, "_codebooks")
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.list(cbDir).iterator().asScala.toSeq
       .foreach(java.nio.file.Files.delete)
     val e = intercept[IllegalStateException] {
-      Similarity.readIvfPqCodebooks(spark, out)
+      AnnIndex(spark, root).codebooks
     }
     assert(e.getMessage.contains("writeIvfPqPartitioned"), e.getMessage)
     // an append against the corrupt sidecar must FAIL (mis-celling
     // hazard), not skip validation as if the sidecar were absent
     val batch = Seq((200L, Array.fill(8)(0.1f))).toDF("vec_id", "embedding")
     intercept[IllegalStateException] {
-      Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, pqCb, out)
+      AnnIndex(spark, root).append(batch, "vec_id", "embedding")
     }
     // a compaction of the corrupt layout fails with the curated
     // message BEFORE any dst write — no partial generation left
     // behind (r15 ADVICE)
-    val dst = out + "_gen1"
+    val dst = root + "/gen1"
     intercept[IllegalStateException] {
-      Similarity.compactIvfPqLayout(spark, out, dst)
+      AnnIndex(spark, root).compact()
     }
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dst)),
       "a failed compaction must not leave a partial dst generation")
-    // a sidecar-LESS layout still reads as absent (pre-sidecar compat)
+    assert(Layouts.currentGenerationName(spark, root) == "gen0")
+    // a sidecar-LESS layout is refused curated: the handle reads kind
+    // and codebooks from the layout and never encodes blind
     java.nio.file.Files.delete(cbDir)
-    assert(!Similarity.hasIvfPqCodebooks(spark, out))
-    Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, pqCb, out)
+    val eAbsent = intercept[IllegalArgumentException] {
+      AnnIndex(spark, root).append(batch, "vec_id", "embedding")
+    }
+    assert(eAbsent.getMessage.contains("no _codebooks sidecar"), eAbsent.getMessage)
   }
 
   test("Dedup.incrementalNearDup: broadcast and shuffle regimes compute identically") {
@@ -1857,7 +1886,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Similarity.ivfCell(bigIvf, col("embedding"))
     }
     assert(e.getMessage.contains("codegen budget"), e.getMessage)
-    assert(e.getMessage.contains("ivfPqTopKAtRest"), e.getMessage)
+    assert(e.getMessage.contains("AnnIndex.topK"), e.getMessage)
     // under the ceiling nothing changes: the small-codebook path that
     // every existing suite drives still builds
     val smallIvf: Similarity.IvfCodebook =
@@ -1902,8 +1931,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .toString + "/layout"
       Similarity.writeIvfPqResidualPartitioned(df, "vec_id", "embedding",
         ivfCb, rcb, out)
-      val atRest = Similarity.ivfPqResidualTopKFromFiles(spark, out,
-        "vec_id", "code", query, k = 5, nprobe = 512)
+      val atRest = AnnIndex(spark, out).topK(query, k = 5, nprobe = 512)
         .collect()
       assert(atRest.length == 5)
       // both faces rank the same corpus through the same quantizer —
@@ -2032,143 +2060,341 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
     val base = java.nio.file.Files.createTempDirectory("graft_maintain").toString
-    Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, pqCb, base + "/a0")
-    Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, pqCb, base + "/b0")
+    // one pointered store per regime, each starting at gen0
+    def store(name: String, write: String => Unit): AnnIndex = {
+      write(s"$base/$name/gen0")
+      Layouts.swapGenerationPointer(spark, s"$base/$name", "gen0")
+      AnnIndex(spark, s"$base/$name")
+    }
+    def raw(p: String): Unit = Similarity.writeIvfPqPartitioned(corpus,
+      "vec_id", "embedding", ivfCb, pqCb, p)
+    val a = store("a", raw)
+    val b = store("b", raw)
     val q = Array.fill(dim)(1.0)
     // in-distribution: the stored tables describe the batch within the
     // threshold -> append in place; the layout then answers over
     // corpus ∪ batch exactly as the in-flight face with the SAME
     // (stored) codebooks
-    val ra = Similarity.maintainIvfPq(spark, base + "/a0", corpus, indist,
-      "vec_id", "embedding", base + "/a1")
+    val ra = a.maintain(corpus, indist, "vec_id", "embedding")
     assert(ra.action == "append", s"$ra")
-    assert(ra.layout == base + "/a0")
+    assert(ra.layout == base + "/a/gen0")
     assert(ra.storedErr <= 2.0 * ra.freshErr, s"$ra")
-    val atRest = Similarity.ivfPqTopKFromFiles(spark, base + "/a0",
-      "vec_id", "code", q, k = 5, nprobe = 2)
+    val atRest = a.topK(q, k = 5, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     val inFlight = Similarity.ivfPqTopK(corpus.unionByName(indist),
       "vec_id", "embedding", q, k = 5, nlist = 4, nprobe = 2, m = 4, ks = 16,
       ivfCb = Some(ivfCb), pqCb = Some(pqCb))
       .as[(Long, Double)].collect().toSeq
     assert(atRest == inFlight, s"$atRest vs $inFlight")
-    // nothing was written at the rebuild target on the append path
-    assert(!new java.io.File(base + "/a1").exists())
+    // nothing was written at the next generation on the append path
+    assert(!new java.io.File(base + "/a/gen1").exists())
+    assert(Layouts.currentGenerationName(spark, base + "/a") == "gen0")
     // drifted: the stored tables describe the batch ~1000x worse than
     // its own -> retrain on corpus ∪ batch into a NEW generation; the
     // rebuilt layout is self-contained and answers as the in-flight
     // face with codebooks derived from the union
-    val rb = Similarity.maintainIvfPq(spark, base + "/b0", corpus, drifted,
-      "vec_id", "embedding", base + "/b1")
+    val rb = b.maintain(corpus, drifted, "vec_id", "embedding")
     assert(rb.action == "rebuild", s"$rb")
-    assert(rb.layout == base + "/b1")
+    assert(rb.layout == base + "/b/gen1")
     assert(rb.storedErr > 2.0 * rb.freshErr, s"$rb")
     val all = corpus.unionByName(drifted)
     val newIvf = Similarity.ivfCodebook(all, "vec_id", "embedding", nlist = 4)
     val newPq = Similarity.pqCodebooks(all, "vec_id", "embedding", m = 4, ks = 16)
-    val atRest2 = Similarity.ivfPqTopKFromFiles(spark, base + "/b1",
-      "vec_id", "code", q, k = 5, nprobe = 2)
+    val atRest2 = b.topK(q, k = 5, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     val inFlight2 = Similarity.ivfPqTopK(all, "vec_id", "embedding", q,
       k = 5, nlist = 4, nprobe = 2, m = 4, ks = 16,
       ivfCb = Some(newIvf), pqCb = Some(newPq))
       .as[(Long, Double)].collect().toSeq
     assert(atRest2 == inFlight2, s"$atRest2 vs $inFlight2")
-    // the original generation is untouched by the rebuild (LSM pointer
-    // swap is the caller's move)
-    assert(Similarity.ivfPqTopKFromFiles(spark, base + "/b0", "vec_id",
-      "code", q, k = 5, nprobe = 2).count() == 5)
+    // the superseded generation is untouched by the rebuild (probes in
+    // flight across the swap keep their files)
+    assert(AnnIndex(spark, base + "/b/gen0").topK(q, k = 5, nprobe = 2)
+      .count() == 5)
     // KIND-AWARENESS: the same decisions on a RESIDUAL ('rpq') layout,
     // with residual scoring, residual appends and an 'rpq' rebuild
     val rcb = Similarity.residualPqCodebooks(corpus, "vec_id", "embedding",
       ivfCb, m = 4, ks = 16)
-    Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, rcb, base + "/r0")
-    val rr = Similarity.maintainIvfPq(spark, base + "/r0", corpus, indist,
-      "vec_id", "embedding", base + "/r1")
+    val r = store("r", p => Similarity.writeIvfPqResidualPartitioned(corpus,
+      "vec_id", "embedding", ivfCb, rcb, p))
+    val rr = r.maintain(corpus, indist, "vec_id", "embedding")
     assert(rr.action == "append", s"$rr")
-    val rAtRest = Similarity.ivfPqResidualTopKFromFiles(spark, base + "/r0",
-      "vec_id", "code", q, k = 5, nprobe = 2)
+    val rAtRest = r.topK(q, k = 5, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     val rInFlight = Similarity.ivfPqResidualTopK(corpus.unionByName(indist),
       "vec_id", "embedding", q, k = 5, nlist = 4, nprobe = 2, m = 4, ks = 16,
       ivfCb = Some(ivfCb), residualCb = Some(rcb))
       .as[(Long, Double)].collect().toSeq
     assert(rAtRest == rInFlight, s"$rAtRest vs $rInFlight")
-    val rd = Similarity.maintainIvfPq(spark, base + "/r0", corpus, drifted,
-      "vec_id", "embedding", base + "/r2")
-    assert(rd.action == "rebuild", s"$rd")
+    val rd = r.maintain(corpus, drifted, "vec_id", "embedding")
+    assert(rd.action == "rebuild" && rd.layout == base + "/r/gen1", s"$rd")
     // the rebuilt generation is an 'rpq' layout answering residual
     // probes — a raw rebuild here would poison every future probe
-    assert(Similarity.sidecarPqKind(spark, base + "/r2") == "rpq")
-    assert(Similarity.ivfPqResidualTopKFromFiles(spark, base + "/r2",
-      "vec_id", "code", q, k = 5, nprobe = 2).count() == 5)
+    assert(r.codebooks.kind == "rpq")
+    assert(r.topK(q, k = 5, nprobe = 2).count() == 5)
     // a trickle batch (<= ks rows) always appends: its own stand-in
     // codebooks memorize it (freshErr = 0) and the raw comparison
     // would spuriously retrain the whole corpus
     val trickle = sample(8, 25.0, 3000L).toDF("vec_id", "embedding")
-    val rc = Similarity.maintainIvfPq(spark, base + "/a0", corpus, trickle,
-      "vec_id", "embedding", base + "/a2")
+    val rc = a.maintain(corpus, trickle, "vec_id", "embedding")
     assert(rc.action == "append", s"$rc")
     assert(rc.freshErr == 0.0, s"$rc")
-    // curated refusals: a sub-1.0 threshold rebuilds every batch; an
-    // in-place rebuild target would clobber the files it reads
+    // curated refusal: a sub-1.0 threshold rebuilds every batch
     val e1 = intercept[IllegalArgumentException] {
-      Similarity.maintainIvfPq(spark, base + "/a0", corpus, indist,
-        "vec_id", "embedding", base + "/x", driftThreshold = 0.5)
+      a.maintain(corpus, indist, "vec_id", "embedding", driftThreshold = 0.5)
     }
     assert(e1.getMessage.contains("below 1.0"), e1.getMessage)
-    val e2 = intercept[IllegalArgumentException] {
-      Similarity.maintainIvfPq(spark, base + "/a0", corpus, indist,
-        "vec_id", "embedding", base + "/a0")
+  }
+
+  /** The AnnIndex probe matrix {pq, rpq} x {base, increments} x {plain,
+    * pointered}: 200 rows, three quarters in the base and every 4th row
+    * as one committed increment (batch 0); three probe vectors whose
+    * probe sets are disjoint (all-ones vs all-minus-ones) or mixed.
+    */
+  private class AnnMatrix(prefix: String) {
+    import spark.implicits._
+    private val rnd = new scala.util.Random(131)
+    private val dim = 16
+    private val emb = (0L until 200L).map(i =>
+      (i, Array.tabulate(dim)(j => math.sin(i * 0.37 + j) + rnd.nextGaussian() * 0.1)))
+      .toDF("vec_id", "embedding")
+    val corpus = emb.where(col("vec_id") % 4 =!= 0)
+    val incr = emb.where(col("vec_id") % 4 === 0)
+    private val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 8)
+    private val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
+    private val rcb = Similarity.residualPqCodebooks(corpus, "vec_id", "embedding",
+      ivfCb, m = 4, ks = 16)
+    val qs = Seq(
+      1L -> Array.fill(dim)(1.0),
+      2L -> Array.fill(dim)(-1.0),
+      3L -> Array.tabulate(dim)(j => if (j % 2 == 0) 1.5 else -0.5))
+    val base = java.nio.file.Files.createTempDirectory(prefix).toString
+    def write(kind: String, df: org.apache.spark.sql.DataFrame, p: String): Unit =
+      if (kind == "pq")
+        Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding", ivfCb, pqCb, p)
+      else Similarity.writeIvfPqResidualPartitioned(df, "vec_id", "embedding",
+        ivfCb, rcb, p)
+    /** The in-flight encoder over ALL 200 rows with the same tables:
+      * what every layout shape must answer. */
+    def inFlight(kind: String, qv: Array[Double], k: Int = 7,
+        nprobe: Int = 3): Seq[(Long, Double)] =
+      (if (kind == "pq")
+        Similarity.ivfPqTopK(emb, "vec_id", "embedding", qv, k = k, nlist = 8,
+          nprobe = nprobe, m = 4, ks = 16, ivfCb = Some(ivfCb), pqCb = Some(pqCb))
+      else Similarity.ivfPqResidualTopK(emb, "vec_id", "embedding", qv, k = k,
+          nlist = 8, nprobe = nprobe, m = 4, ks = 16,
+          ivfCb = Some(ivfCb), residualCb = Some(rcb)))
+        .as[(Long, Double)].collect().toSeq
+    /** Writes each {pq, rpq} x {plain, pointered} layout under `base` —
+      * the base rows only when `streamed`, the increment then appended
+      * through the handle as batch 0 — and hands `check` its handle. */
+    def foreachCell(streamed: Boolean)(
+        check: (String, String, String, AnnIndex) => Unit): Unit =
+      for (kind <- Seq("pq", "rpq"); pointered <- Seq(false, true)) {
+        val tag = s"$kind/${if (streamed) "increments" else "base"}/" +
+          (if (pointered) "pointered" else "plain")
+        val root = s"$base/$kind-$pointered"
+        val at = if (pointered) root + "/gen0" else root
+        write(kind, if (streamed) corpus else emb, at)
+        if (pointered) Layouts.swapGenerationPointer(spark, root, "gen0")
+        val index = AnnIndex(spark, root)
+        assert(index.layout == at, tag)
+        assert(index.codebooks.kind == kind, tag)
+        if (streamed) {
+          // a streamed batch lands in its own increment directory; plain
+          // reads of the base stay base-only
+          index.append(incr, "vec_id", "embedding", batchId = Some(0L))
+          assert(spark.read.parquet(at).count() == 150, tag)
+        }
+        check(tag, kind, root, index)
+      }
+    /** Each query's slice of the batched probe equals the single probe,
+      * which equals the in-flight encoder; the batch is globally ordered
+      * and reads ONE scan of the union of probed cells per directory
+      * family (base, plus the increments when present), with the
+      * per-query top-k window as the only exchange. */
+    def assertProbeParity(tag: String, kind: String, index: AnnIndex,
+        streamed: Boolean): Unit = {
+      val batch = index.topK(qs, k = 7, nprobe = 3, excludeBatchId = None)
+      val rows = batch.as[(Long, Long, Double)].collect().toSeq
+      // globally ordered as promised: (query_id, adc, id)
+      assert(rows == rows.sortBy(r => (r._1, r._3, r._2)), s"$tag: $rows")
+      qs.foreach { case (qid, qv) =>
+        val single = index.topK(qv, k = 7, nprobe = 3)
+          .as[(Long, Double)].collect().toSeq
+        val slice = rows.filter(_._1 == qid).map(r => (r._2, r._3))
+        assert(slice == single, s"$tag query $qid: batched $slice vs single $single")
+        // at rest == in flight; residual values to ulp-level (at rest
+        // associates in residual coordinates, in flight in combined ones)
+        val want = inFlight(kind, qv)
+        assert(single.map(_._1) == want.map(_._1), s"$tag query $qid: $single vs $want")
+        single.zip(want).foreach { case ((_, x), (_, y)) =>
+          assert(math.abs(x - y) < 1e-9, s"$tag query $qid: $x vs $y")
+        }
+      }
+      val plan = batch.queryExecution.executedPlan.toString
+      assert("Scan parquet".r.findAllIn(plan).length == (if (streamed) 2 else 1),
+        s"$tag:\n$plan")
+      assert(!plan.contains("Exchange SinglePartition"), s"$tag:\n$plan")
     }
-    assert(e2.getMessage.contains("rebuildAt"), e2.getMessage)
   }
 
   test("ivfPqTopKBatchFromFiles: per-query parity with the single probe, one scan, disjoint probe sets masked") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(131)
-    val dim = 16
-    val emb = (0L until 200L).map(i =>
-      (i, Array.tabulate(dim)(j => math.sin(i * 0.37 + j) + rnd.nextGaussian() * 0.1)))
-      .toDF("vec_id", "embedding")
-    val ivfCb = Similarity.ivfCodebook(emb, "vec_id", "embedding", nlist = 8)
-    val pqCb = Similarity.pqCodebooks(emb, "vec_id", "embedding", m = 4, ks = 16)
-    val base = java.nio.file.Files.createTempDirectory("graft_batchprobe").toString
-    Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding",
-      ivfCb, pqCb, base + "/layout")
-    val q1 = Array.fill(dim)(1.0)
-    val q2 = Array.fill(dim)(-1.0)
-    val q3 = Array.tabulate(dim)(j => if (j % 2 == 0) 1.5 else -0.5)
-    val batch = Similarity.ivfPqTopKBatchFromFiles(spark, base + "/layout",
-      "vec_id", "code", Seq(1L -> q1, 2L -> q2, 3L -> q3), k = 7, nprobe = 3)
-    val got = batch.as[(Long, Long, Double)].collect()
-      .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).sortBy(r => (r._2, r._1)).toSeq).toMap
-    // parity: each query's slice equals the single-query probe
-    Seq(1L -> q1, 2L -> q2, 3L -> q3).foreach { case (qid, qv) =>
-      val single = Similarity.ivfPqTopKFromFiles(spark, base + "/layout",
-        "vec_id", "code", qv, k = 7, nprobe = 3)
-        .as[(Long, Double)].collect().toSeq
-      assert(got(qid) == single, s"query $qid: ${got(qid)} vs $single")
+    val m = new AnnMatrix("graft_batchprobe")
+    m.foreachCell(streamed = false) { (tag, kind, _, index) =>
+      m.assertProbeParity(tag, kind, index, streamed = false)
     }
-    // one scan of the union of probed cells; the only exchange is the
-    // per-query top-k window
-    val plan = batch.queryExecution.executedPlan.toString
-    assert("Scan parquet".r.findAllIn(plan).length == 1, plan)
-    assert(!plan.contains("Exchange SinglePartition"), plan)
     // curated refusals
+    val any = AnnIndex(spark, s"${m.base}/pq-false")
     val e1 = intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopKBatchFromFiles(spark, base + "/layout",
-        "vec_id", "code", Nil, k = 5)
+      any.topK(Nil, k = 5, nprobe = 3, excludeBatchId = None)
     }
     assert(e1.getMessage.contains("at least one query"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopKBatchFromFiles(spark, base + "/layout",
-        "vec_id", "code", Seq(1L -> q1, 1L -> q2), k = 5)
+      any.topK(Seq(1L -> m.qs(0)._2, 1L -> m.qs(1)._2), k = 5, nprobe = 3,
+        excludeBatchId = None)
     }
     assert(e2.getMessage.contains("duplicate"), e2.getMessage)
+    val e3 = intercept[IllegalArgumentException] {
+      any.topK(m.qs(0)._2, k = 5, nprobe = 0)
+    }
+    assert(e3.getMessage.contains("nprobe"), e3.getMessage)
+  }
+
+  test("batched probes: residual and increments parity with single probes, output globally ordered") {
+    import spark.implicits._
+    val m = new AnnMatrix("graft_batchkinds")
+    m.foreachCell(streamed = true) { (tag, kind, _, index) =>
+      m.assertProbeParity(tag, kind, index, streamed = true)
+      // the replay rule: excluding the increment's own batch id answers
+      // base-only, single and batched alike
+      val excl = index.topK(m.qs, k = 7, nprobe = 3, excludeBatchId = Some(0L))
+        .select("vec_id").as[Long].collect().toSet ++
+        index.topK(m.qs(0)._2, k = 7, nprobe = 3, excludeBatchId = Some(0L))
+          .select("vec_id").as[Long].collect()
+      assert(excl.forall(_ % 4 != 0), s"$tag: excluded batch leaked: $excl")
+    }
+  }
+
+  test("kind-aware streamed increments: an rpq layout gets residual codes, probe parity with the batch face") {
+    import spark.implicits._
+    val m = new AnnMatrix("graft_rpq_incr")
+    val q = m.qs(2)._2
+    m.foreachCell(streamed = true) { (tag, kind, root, index) =>
+      // the KIND picks the encoder: with every cell probed, each of the
+      // 200 rows (the 50 streamed ones too) carries the in-flight
+      // encoder's ADC value for this layout's kind
+      val all = index.topK(q, k = 200, nprobe = 8).as[(Long, Double)].collect().toMap
+      val want = m.inFlight(kind, q, k = 200, nprobe = 8).toMap
+      assert(all.keySet == want.keySet && all.size == 200,
+        s"$tag: ${want.keySet -- all.keySet} missing")
+      all.foreach { case (id, x) =>
+        assert(math.abs(x - want(id)) < 1e-9, s"$tag id $id: $x vs ${want(id)}")
+      }
+      // stream/batch parity: the same rows appended into the base's
+      // cell directories answer identically
+      val twin = root + "_batchface"
+      m.write(kind, m.corpus, twin)
+      AnnIndex(spark, twin).append(m.incr, "vec_id", "embedding")
+      assert(AnnIndex(spark, twin).topK(q, k = 8, nprobe = 2)
+        .as[(Long, Double)].collect().toSeq ==
+        index.topK(q, k = 8, nprobe = 2).as[(Long, Double)].collect().toSeq,
+        tag)
+    }
+    // a sidecar-less path names the missing sidecar
+    val e = intercept[IllegalArgumentException] {
+      AnnIndex(spark, m.base + "/nowhere").topK(q, k = 3)
+    }
+    assert(e.getMessage.contains("sidecar"), e.getMessage)
+  }
+
+  test("AnnIndex lifecycle on an unpointered path refuses curated, before any write") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(61)
+    val dim = 16
+    def sample(n: Int, off: Double, base: Long) =
+      clusterSample(rnd, dim)(n, off, base)
+    val corpus = sample(64, 0.0, 0L).toDF("vec_id", "embedding")
+    val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
+    val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
+    val out = java.nio.file.Files.createTempDirectory("graft_unpointered").toString + "/gen0"
+    Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding", ivfCb, pqCb, out)
+    val index = AnnIndex(spark, out)
+    val drifted = sample(48, 25.0, 2000L).toDF("vec_id", "embedding")
+    val refusals = Seq(
+      "maintain" -> (() => index.maintain(corpus, drifted, "vec_id", "embedding")),
+      "maintainFromDriftSeries" -> (() =>
+        index.maintainFromDriftSeries(out + "_drift", corpus, "vec_id", "embedding")),
+      "compact" -> (() => index.compact()))
+    refusals.foreach { case (op, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(s"AnnIndex.$op needs a pointered store root"), e.getMessage)
+      assert(e.getMessage.contains("swapGenerationPointer"), e.getMessage)
+    }
+    // nothing was written next to the layout, and it still probes
+    val parent = new java.io.File(out).getParentFile
+    assert(parent.list().toSeq == Seq("gen0"), parent.list().toSeq)
+    assert(index.topK(Array.fill(dim)(1.0), k = 5, nprobe = 2).count() == 5)
+  }
+
+  test("AnnIndex: a probe after a pointered maintain rebuild answers from gen<k+1>") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(67)
+    val dim = 16
+    def sample(n: Int, off: Double, base: Long) =
+      clusterSample(rnd, dim)(n, off, base)
+    val corpus = sample(64, 0.0, 0L).toDF("vec_id", "embedding")
+    val drifted = sample(48, 25.0, 2000L).toDF("vec_id", "embedding")
+    val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
+    val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
+    val root = java.nio.file.Files.createTempDirectory("graft_ptr_probe").toString
+    Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding", ivfCb, pqCb,
+      root + "/gen0")
+    Layouts.swapGenerationPointer(spark, root, "gen0")
+    // ONE handle, built before the rebuild and reused after it
+    val index = AnnIndex(spark, root)
+    val q = Array.fill(dim)(1.0)
+    // every cell probed, k past the row count: the probe returns the
+    // whole generation it answers from
+    def probe(i: AnnIndex) =
+      i.topK(q, k = 200, nprobe = 4).as[(Long, Double)].collect().toSeq
+    val before = probe(index)
+    assert(before == probe(AnnIndex(spark, root + "/gen0")))
+    assert(before.length == 64 && before.forall(_._1 < 2000L), s"$before")
+    val r = index.maintain(corpus, drifted, "vec_id", "embedding")
+    assert(r.action == "rebuild" && r.layout == root + "/gen1", s"$r")
+    assert(index.layout == root + "/gen1")
+    // gen1 re-encodes corpus ∪ batch: the drifted rows answer now
+    val after = probe(index)
+    assert(after == probe(AnnIndex(spark, root + "/gen1")), s"$after")
+    assert(after.length == 64 + 48 && after.exists(_._1 >= 2000L), s"$after")
+  }
+
+  test("AnnIndex: single-query topK equals the batched topK of a 1-element batch, ids and ADC values") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(71)
+    val dim = 16
+    val emb = (0L until 160L).map(i =>
+      (i, Array.tabulate(dim)(j => math.cos(i * 0.53 + j) + rnd.nextGaussian() * 0.1)))
+      .toDF("vec_id", "embedding")
+    val ivfCb = Similarity.ivfCodebook(emb, "vec_id", "embedding", nlist = 8)
+    val pqCb = Similarity.pqCodebooks(emb, "vec_id", "embedding", m = 4, ks = 16)
+    val rcb = Similarity.residualPqCodebooks(emb, "vec_id", "embedding",
+      ivfCb, m = 4, ks = 16)
+    val base = java.nio.file.Files.createTempDirectory("graft_one_batch").toString
+    Similarity.writeIvfPqPartitioned(emb, "vec_id", "embedding", ivfCb, pqCb,
+      base + "/pq")
+    Similarity.writeIvfPqResidualPartitioned(emb, "vec_id", "embedding", ivfCb, rcb,
+      base + "/rpq")
+    val q = Array.tabulate(dim)(j => if (j % 3 == 0) 1.0 else -0.25)
+    for (kind <- Seq("pq", "rpq")) {
+      val index = AnnIndex(spark, s"$base/$kind")
+      val single = index.topK(q, k = 9, nprobe = 3).as[(Long, Double)].collect().toSeq
+      val batched = index.topK(Seq(42L -> q), k = 9, nprobe = 3, excludeBatchId = None)
+        .as[(Long, Long, Double)].collect().toSeq
+      assert(batched.forall(_._1 == 42L), s"$kind: $batched")
+      assert(batched.map(r => (r._2, r._3)) == single, s"$kind: $batched vs $single")
+    }
   }
 
   test("maintainFromDriftSeries: a drifting stream triggers exactly one rebuild, probes agree across the swap") {
@@ -2188,26 +2414,27 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = java.nio.file.Files.createTempDirectory("graft_driftseries").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
+    Layouts.swapGenerationPointer(spark, base, "gen0")
+    val index = AnnIndex(spark, base)
     val batches = Seq(
       sample(24, 0.0, 1000L), sample(24, 0.0, 2000L),   // in-distribution
       sample(24, 25.0, 3000L), sample(24, 25.0, 4000L)) // drifted
       .map(_.toDF("vec_id", "embedding"))
     def ingest(upTo: Int): Unit = (0 until upTo).foreach { i =>
-      StreamingSimilarity.ingestBatch(batches(i), i.toLong, base + "/gen0",
+      StreamingSimilarity.ingestBatch(batches(i), i.toLong, base,
         "vec_id", "embedding", Some(base + "/drift"))
     }
     // an in-distribution prefix (shorter than 2 windows) KEEPS — the
     // monitor never compares a series against itself
     ingest(2)
     val allSoFar = corpus.unionByName(batches(0)).unionByName(batches(1))
-    val r1 = Similarity.maintainFromDriftSeries(spark, base + "/drift",
-      base + "/gen0", allSoFar, "vec_id", "embedding", base + "/gen1",
-      window = 2)
+    val r1 = index.maintainFromDriftSeries(base + "/drift", allSoFar,
+      "vec_id", "embedding", window = 2)
     assert(r1.action == "keep", s"$r1")
     assert(r1.layout == base + "/gen0")
     assert(r1.batches == 2)
     assert(!new java.io.File(base + "/gen1").exists(),
-      "keep must not write the rebuild target")
+      "keep must not write the next generation")
     // the full drifted series REBUILDS: trailing median >> baseline
     ingest(4)
     val series = Similarity.readDriftSeries(spark, base + "/drift")
@@ -2215,96 +2442,93 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(series.map(_._1) == Seq(0L, 1L, 2L, 3L), s"$series")
     assert(series(2)._2 > series(0)._2 * 100, s"$series")
     val all = batches.foldLeft(corpus)(_ unionByName _)
-    val r2 = Similarity.maintainFromDriftSeries(spark, base + "/drift",
-      base + "/gen0", all, "vec_id", "embedding", base + "/gen1",
-      window = 2)
+    val r2 = index.maintainFromDriftSeries(base + "/drift", all,
+      "vec_id", "embedding", window = 2)
     assert(r2.action == "rebuild", s"$r2")
     assert(r2.layout == base + "/gen1")
+    assert(index.layout == base + "/gen1")
     assert(r2.trailingErr > 2.0 * r2.baselineErr, s"$r2")
     // the quiesce marker is released after the retrain
-    assert(!graft.ops.Layouts.exists(spark,
-      base + "/gen0/" + graft.ops.Layouts.QuiesceMarker))
+    assert(!Layouts.exists(spark, base + "/gen0/" + Layouts.QuiesceMarker))
     // probes agree across the swap: the new generation answers exactly
     // the in-flight top-k over the full corpus with codebooks retrained
     // on it (the deterministic smallest-id rule, geometry preserved)
     val q = Array.fill(dim)(1.0)
     val newIvf = Similarity.ivfCodebook(all, "vec_id", "embedding", nlist = 4)
     val newPq = Similarity.pqCodebooks(all, "vec_id", "embedding", m = 4, ks = 16)
-    val atRest = Similarity.ivfPqTopKFromFiles(spark, base + "/gen1",
-      "vec_id", "code", q, k = 8, nprobe = 2)
+    val atRest = index.topK(q, k = 8, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
     val inFlight = Similarity.ivfPqTopK(all, "vec_id", "embedding", q,
       k = 8, nlist = 4, nprobe = 2, m = 4, ks = 16,
       ivfCb = Some(newIvf), pqCb = Some(newPq))
       .as[(Long, Double)].collect().toSeq
     assert(atRest == inFlight, s"$atRest vs $inFlight")
-    // exactly ONE rebuild happened across both calls: gen1 was absent
-    // until the drifted series demanded it (asserted above), and the
-    // old generation is untouched (LSM pointer swap is the caller's)
-    assert(Similarity.ivfPqTopKFromFilesWithIncrements(spark, base + "/gen0",
-      "vec_id", "code", q, k = 8, nprobe = 2).count() == 8)
+    // the superseded generation (base + its increments) is untouched
+    assert(AnnIndex(spark, base + "/gen0").topK(q, k = 8, nprobe = 2)
+      .count() == 8)
     // the FENCE: the reports the rebuild consumed never re-fire it —
     // the immediate re-run (the recurring monitor's next tick) keeps,
     // with an empty post-fence series
-    val r2b = Similarity.maintainFromDriftSeries(spark, base + "/drift",
-      base + "/gen0", all, "vec_id", "embedding", base + "/gen1b",
-      window = 2)
+    val r2b = index.maintainFromDriftSeries(base + "/drift", all,
+      "vec_id", "embedding", window = 2)
     assert(r2b.action == "keep" && r2b.batches == 0, s"$r2b")
-    assert(!new java.io.File(base + "/gen1b").exists())
+    assert(!new java.io.File(base + "/gen2").exists())
     // a fresh post-fence window CAN rebuild again — but never onto an
-    // existing generation (the crashed-rebuild / live-generation guard)
+    // existing generation (the crashed-rebuild guard: a gen2 left
+    // unfenced by a run that died before its fence write)
     Seq(sample(24, 0.0, 5000L), sample(24, 0.0, 6000L),
         sample(24, 25.0, 7000L), sample(24, 25.0, 8000L))
       .zipWithIndex.foreach { case (rows, i) =>
         StreamingSimilarity.ingestBatch(rows.toDF("vec_id", "embedding"),
-          (4 + i).toLong, base + "/gen0", "vec_id", "embedding",
+          (4 + i).toLong, base, "vec_id", "embedding",
           Some(base + "/drift"))
       }
+    assert(new java.io.File(base + "/gen2").mkdirs())
     val eExists = intercept[IllegalArgumentException] {
-      Similarity.maintainFromDriftSeries(spark, base + "/drift",
-        base + "/gen0", all, "vec_id", "embedding", base + "/gen1",
-        window = 2)
+      index.maintainFromDriftSeries(base + "/drift", all,
+        "vec_id", "embedding", window = 2)
     }
     assert(eExists.getMessage.contains("already exists"), eExists.getMessage)
+    assert(new java.io.File(base + "/gen2").delete())
     // pruning drops exactly the consumed reports (<= fence): the
     // dashboard read then shows only live history, and the next
     // decision is unchanged
     assert(Similarity.pruneDriftSeries(spark, base + "/drift") == 4)
     assert(Similarity.readDriftSeries(spark, base + "/drift")
       .as[(Long, Double)].collect().map(_._1).toSeq == Seq(4L, 5L, 6L, 7L))
-    val r4 = Similarity.maintainFromDriftSeries(spark, base + "/drift",
-      base + "/gen0", all, "vec_id", "embedding", base + "/gen2",
-      window = 2)
+    val r4 = index.maintainFromDriftSeries(base + "/drift", all,
+      "vec_id", "embedding", window = 2)
     assert(r4.action == "rebuild" && r4.batches == 4, s"$r4")
+    assert(r4.layout == base + "/gen2")
     // KIND-AWARENESS: an 'rpq' layout's monitor scores residual
     // distortion per batch and its rebuild writes an 'rpq' generation
     val rcb = Similarity.residualPqCodebooks(corpus, "vec_id", "embedding",
       ivfCb, m = 4, ks = 16)
     Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, rcb, base + "/r0")
+      ivfCb, rcb, base + "/r/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/r", "gen0")
     Seq(sample(24, 0.0, 11000L), sample(24, 0.0, 12000L),
         sample(24, 25.0, 13000L), sample(24, 25.0, 14000L))
       .zipWithIndex.foreach { case (rows, i) =>
         StreamingSimilarity.ingestBatch(rows.toDF("vec_id", "embedding"),
-          i.toLong, base + "/r0", "vec_id", "embedding",
+          i.toLong, base + "/r", "vec_id", "embedding",
           Some(base + "/rdrift"))
       }
-    val r5 = Similarity.maintainFromDriftSeries(spark, base + "/rdrift",
-      base + "/r0", all, "vec_id", "embedding", base + "/r1", window = 2)
-    assert(r5.action == "rebuild", s"$r5")
-    assert(Similarity.sidecarPqKind(spark, base + "/r1") == "rpq")
-    assert(Similarity.ivfPqResidualTopKFromFiles(spark, base + "/r1",
-      "vec_id", "code", q, k = 8, nprobe = 2).count() == 8)
-    // an in-distribution trailing window on the SAME layout keeps even
+    val rIndex = AnnIndex(spark, base + "/r")
+    val r5 = rIndex.maintainFromDriftSeries(base + "/rdrift", all,
+      "vec_id", "embedding", window = 2)
+    assert(r5.action == "rebuild" && r5.layout == base + "/r/gen1", s"$r5")
+    assert(rIndex.codebooks.kind == "rpq")
+    assert(rIndex.topK(q, k = 8, nprobe = 2).count() == 8)
+    // an in-distribution trailing window on the SAME store keeps even
     // at full length (threshold respected, not just series length)
     val calm = base + "/calm_drift"
     (0 until 4).foreach { i =>
       StreamingSimilarity.ingestBatch(sample(24, 0.0, 9000L + 100 * i)
-        .toDF("vec_id", "embedding"), i.toLong, base + "/gen0",
+        .toDF("vec_id", "embedding"), i.toLong, base,
         "vec_id", "embedding", Some(calm))
     }
-    val r3 = Similarity.maintainFromDriftSeries(spark, calm,
-      base + "/gen0", all, "vec_id", "embedding", base + "/gen3",
+    val r3 = index.maintainFromDriftSeries(calm, all, "vec_id", "embedding",
       window = 2)
     assert(r3.action == "keep", s"$r3")
     // an unfenced series refuses the prune (nothing provably consumed)
@@ -2312,13 +2536,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Similarity.pruneDriftSeries(spark, calm)
     }
     assert(ePrune.getMessage.contains("fence"), ePrune.getMessage)
-    // curated refusal: an in-place rebuild target would clobber the
-    // files the live stream and the retrain read
-    val e1 = intercept[IllegalArgumentException] {
-      Similarity.maintainFromDriftSeries(spark, base + "/drift",
-        base + "/gen0", all, "vec_id", "embedding", base + "/gen0")
-    }
-    assert(e1.getMessage.contains("rebuildAt"), e1.getMessage)
     // FORMAT-UPGRADE: a series mixing pre-round-18 batches (which also
     // embedded ingest_batch as a data column, equal to the directory
     // value by construction) with new directory-only batches reads
@@ -2330,58 +2547,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val mixed = Similarity.readDriftSeries(spark, base + "/mixed_drift")
       .as[(Long, Double)].collect().toSeq
     assert(mixed == Seq(0L -> 0.5, 1L -> 0.9), s"$mixed")
-  }
-
-  test("kind-aware streamed increments: an rpq layout gets residual codes, probe parity with the batch face") {
-    import spark.implicits._
-    val dim = 16
-    def vecs(n: Int, b: Long) = (0 until n).map { i =>
-      val id = b + i
-      (id, Array.tabulate(dim)(j => math.sin(id * 0.9 + j * 1.7)))
-    }
-    val corpus = vecs(40, 0L).toDF("vec_id", "embedding")
-    val b1 = vecs(10, 100L).toDF("vec_id", "embedding")
-    val b2 = vecs(10, 200L).toDF("vec_id", "embedding")
-    val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
-    val rcb = Similarity.residualPqCodebooks(corpus, "vec_id", "embedding",
-      ivfCb, m = 4, ks = 8)
-    val base = java.nio.file.Files.createTempDirectory("graft_rpq_incr").toString
-    Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, rcb, base + "/streamed")
-    assert(Similarity.sidecarPqKind(spark, base + "/streamed") == "rpq")
-    // the kind-agnostic increment append must pick the RESIDUAL encoder
-    Similarity.appendIvfPqIncrement(b1, "vec_id", "embedding",
-      base + "/streamed", 0L)
-    Similarity.appendIvfPqIncrement(b2, "vec_id", "embedding",
-      base + "/streamed", 1L)
-    val query = Array.fill(dim)(0.5)
-    val streamed = Similarity.ivfPqResidualTopKFromFilesWithIncrements(spark,
-      base + "/streamed", "vec_id", "code", query, k = 8, nprobe = 2)
-      .as[(Long, Double)].collect().toSeq
-    // batch-face parity: the same batches through appendIvfPqResidual
-    Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, rcb, base + "/batched")
-    Similarity.appendIvfPqResidual(b1, "vec_id", "embedding", ivfCb, rcb,
-      base + "/batched")
-    Similarity.appendIvfPqResidual(b2, "vec_id", "embedding", ivfCb, rcb,
-      base + "/batched")
-    val batched = Similarity.ivfPqResidualTopKFromFiles(spark,
-      base + "/batched", "vec_id", "code", query, k = 8, nprobe = 2)
-      .as[(Long, Double)].collect().toSeq
-    assert(streamed == batched, s"$streamed vs $batched")
-    assert(streamed.exists(_._1 >= 100L), s"increments invisible: $streamed")
-    // raw codes can never land in the rpq layout (and vice versa): the
-    // raw probe refuses the layout by kind
-    val e = intercept[IllegalStateException] {
-      Similarity.ivfPqTopKFromFilesWithIncrements(spark, base + "/streamed",
-        "vec_id", "code", query, k = 3)
-    }
-    assert(e.getMessage.contains("'pq'"), e.getMessage)
-    // sidecarPqKind's own refusal face: a sidecar-less path
-    val e2 = intercept[IllegalArgumentException] {
-      Similarity.sidecarPqKind(spark, base + "/nowhere")
-    }
-    assert(e2.getMessage.contains("sidecar"), e2.getMessage)
   }
 
   test("ivfPqDistortion: drift rises off-distribution; residual beats raw on clustered data") {
@@ -2403,7 +2568,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, m = 4, ks = 8)
     // an appended batch from the TRAINED distribution scores like the
     // corpus; a shifted batch scores measurably worse — the rebuild
-    // signal appendIvfPq's scaladoc prices
+    // signal AnnIndex.append's no-retrain contract prices
     val inDist = sample(60, 0.0, 1000L).toDF("vec_id", "embedding")
     val shifted = sample(60, 3.0, 2000L).toDF("vec_id", "embedding")
     val dIn = Similarity.ivfPqDistortion(inDist, "embedding", ivfCb, pqCb,
@@ -2477,11 +2642,10 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ivfCb = Similarity.ivfCodebook(vecs, "vec_id", "embedding", nlist = 2)
     val pqCb = Similarity.pqCodebooks(vecs, "vec_id", "embedding", m = 4, ks = 2)
     Similarity.writeIvfPqPartitioned(vecs, "vec_id", "embedding",
-      ivfCb, pqCb, base + "/gen0")
-    Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/gen1",
-      dropIds = Some(removed.toDF("vec_id")), idCol = "vec_id")
-    val ranked = Similarity.ivfPqTopKFromFiles(spark, base + "/gen1",
-      "vec_id", "code", Array.fill(dim)(0.5), k = 10, nprobe = 2)
+      ivfCb, pqCb, base + "/ann/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/ann", "gen0")
+    AnnIndex(spark, base + "/ann").compact(dropIds = Some(removed.toDF("vec_id")))
+    val ranked = AnnIndex(spark, base + "/ann").topK(Array.fill(dim)(0.5), k = 10, nprobe = 2)
       .collect().map(_.getLong(0)).toSet
     assert(!ranked.contains(0L) && ranked == Set(100L, 7L))
   }
@@ -2489,9 +2653,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a failed compaction data write leaves a DETECTABLE partial dst") {
     import spark.implicits._
     // sidecar-first ordering (r16 ADVICE): if the data rewrite dies,
-    // dst must hold the sidecar — hasIvfPqCodebooks(dst) = true, so
-    // appends against it still validate — never a data-only layout
-    // masquerading as legitimately pre-sidecar
+    // dst must hold the sidecar, so appends against it still validate
+    // — never a data-only layout masquerading as legitimately
+    // pre-sidecar
     val df = (0L until 40L).map(i =>
       (i, Array.tabulate(8)(j => (i * 8 + j).toFloat / 100f)))
       .toDF("vec_id", "embedding")
@@ -2500,17 +2664,19 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = java.nio.file.Files.createTempDirectory("graft_partial_dst").toString
     Similarity.writeIvfPqPartitioned(df, "vec_id", "embedding", ivfCb, pqCb,
       base + "/gen0")
+    Layouts.swapGenerationPointer(spark, base, "gen0")
     // a tombstone frame that throws at EXECUTION time fails the data
     // write job itself, after validation and the sidecar copy
     val boom = udf((id: Long) =>
       if (id >= 0) throw new RuntimeException("boom") else id)
     val badDrop = df.select(boom(col("vec_id")).as("vec_id"))
     intercept[org.apache.spark.SparkException] {
-      Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/gen1",
-        dropIds = Some(badDrop), idCol = "vec_id")
+      AnnIndex(spark, base).compact(dropIds = Some(badDrop))
     }
-    assert(Similarity.hasIvfPqCodebooks(spark, base + "/gen1"),
+    assert(AnnIndex(spark, base + "/gen1").codebooks.kind == "pq",
       "partial dst generation must carry the sidecar (detectable)")
+    // the pointer never moved onto the partial generation
+    assert(Layouts.currentGenerationName(spark, base) == "gen0")
     // same contract for the near-dup index's _meta sidecar
     val corpus = Seq((0L, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")
@@ -2524,7 +2690,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .contains((128, 32, 3)),
       "partial idx generation must carry _meta (detectable)")
     // and a rerun of the compaction clears the partial generation
-    Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/gen1")
+    AnnIndex(spark, base).compact()
     assert(spark.read.parquet(base + "/gen1").count() == 40)
     Dedup.compactNearDupIndex(spark, base + "/idx0", base + "/idx1")
     assert(Dedup.nearDupPairsFromIndex(base + "/idx1", corpus,
@@ -2550,7 +2716,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         spark.sparkContext.parallelize(kept.toSeq), schema)
       .coalesce(1).write.mode("overwrite").parquet(out + "/_codebooks")
     val e = intercept[IllegalStateException] {
-      Similarity.readIvfPqCodebooks(spark, out)
+      AnnIndex(spark, out).codebooks
     }
     assert(e.getMessage.contains("no 'ivf'"), e.getMessage)
     assert(e.getMessage.contains("kinds present: pq"), e.getMessage)
@@ -2595,31 +2761,29 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(eNoPtr.getMessage.contains("swapGenerationPointer"), eNoPtr.getMessage)
     Layouts.swapGenerationPointer(spark, root, "gen0")
     assert(Layouts.currentGeneration(spark, root) == root + "/gen0")
-    // resolveLayout: a pointered root resolves through the pointer, a
-    // plain layout path resolves to itself
-    assert(Similarity.resolveLayout(spark, root) == root + "/gen0")
-    assert(Similarity.resolveLayout(spark, root + "/gen0") == root + "/gen0")
+    // a pointered root resolves through the pointer, a plain layout
+    // path resolves to itself
+    val index = AnnIndex(spark, root)
+    assert(index.layout == root + "/gen0")
+    assert(AnnIndex(spark, root + "/gen0").layout == root + "/gen0")
     val q = Array.fill(dim)(1.0)
-    assert(Similarity.ivfPqTopKFromFiles(spark, root, "vec_id", "code",
-      q, k = 5, nprobe = 2).count() == 5)
+    assert(index.topK(q, k = 5, nprobe = 2).count() == 5)
     // in-distribution: append in place, pointer unmoved
-    val ra = Similarity.maintainPointedIvfPq(spark, root, corpus, indist,
-      "vec_id", "embedding")
+    val ra = index.maintain(corpus, indist, "vec_id", "embedding")
     assert(ra.action == "append" && ra.layout == root + "/gen0", s"$ra")
     assert(Layouts.currentGenerationName(spark, root) == "gen0")
     // drifted: rebuild into gen1 with the pointer swapped INSIDE the
     // quiesce window; marker released after; the ROOT probe answers
     // from the new generation with union-retrained codebooks
     val all = corpus.unionByName(indist).unionByName(drifted)
-    val rb = Similarity.maintainPointedIvfPq(spark, root,
-      corpus.unionByName(indist), drifted, "vec_id", "embedding")
+    val rb = index.maintain(corpus.unionByName(indist), drifted,
+      "vec_id", "embedding")
     assert(rb.action == "rebuild" && rb.layout == root + "/gen1", s"$rb")
     assert(Layouts.currentGenerationName(spark, root) == "gen1")
     assert(!Layouts.exists(spark, root + "/gen0/" + Layouts.QuiesceMarker))
     val newIvf = Similarity.ivfCodebook(all, "vec_id", "embedding", nlist = 4)
     val newPq = Similarity.pqCodebooks(all, "vec_id", "embedding", m = 4, ks = 16)
-    val atRoot = Similarity.ivfPqTopKFromFiles(spark, root, "vec_id", "code",
-      q, k = 8, nprobe = 2).as[(Long, Double)].collect().toSeq
+    val atRoot = AnnIndex(spark, root).topK(q, k = 8, nprobe = 2).as[(Long, Double)].collect().toSeq
     val inFlight = Similarity.ivfPqTopK(all, "vec_id", "embedding", q,
       k = 8, nlist = 4, nprobe = 2, m = 4, ks = 16,
       ivfCb = Some(newIvf), pqCb = Some(newPq))
@@ -2628,14 +2792,12 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a second drifted wave: gen2; vacuum keep=1 then reclaims gen0 +
     // gen1, spares the pointed-at generation, probes unaffected
     val drifted2 = sample(48, 50.0, 3000L).toDF("vec_id", "embedding")
-    val rc = Similarity.maintainPointedIvfPq(spark, root, all, drifted2,
-      "vec_id", "embedding")
+    val rc = index.maintain(all, drifted2, "vec_id", "embedding")
     assert(rc.action == "rebuild" && rc.layout == root + "/gen2", s"$rc")
     val gone = Layouts.vacuumGenerations(spark, root, keep = 1)
     assert(gone == Seq("gen0", "gen1"), s"$gone")
     assert(Layouts.currentGenerationName(spark, root) == "gen2")
-    assert(Similarity.ivfPqTopKFromFiles(spark, root, "vec_id", "code",
-      q, k = 5, nprobe = 2).count() == 5)
+    assert(AnnIndex(spark, root).topK(q, k = 5, nprobe = 2).count() == 5)
     // alsoKeep spares a named generation; keep must cover the live one
     assert(Layouts.vacuumGenerations(spark, root, keep = 1,
       alsoKeep = Seq("gen2")).isEmpty)
@@ -2649,8 +2811,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ivfCb, pqCb, side)
     Layouts.swapGenerationPointer(spark, root, "side")
     val eName = intercept[IllegalArgumentException] {
-      Similarity.maintainPointedIvfPq(spark, root, corpus, drifted,
-        "vec_id", "embedding")
+      index.maintain(corpus, drifted, "vec_id", "embedding")
     }
     assert(eName.getMessage.contains("gen<k>"), eName.getMessage)
   }
@@ -2667,122 +2828,36 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 16)
     val base = java.nio.file.Files.createTempDirectory("graft_trained").toString
-    // RAW kind: one stand-in rebuild, one trained rebuild, same fixture
-    Seq("s", "t").foreach { tag =>
-      Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-        ivfCb, pqCb, base + s"/${tag}0")
+    // one pointered store per (kind, trainer): rebuilt once from gen0
+    def rebuilt(tag: String, write: String => Unit, trained: Boolean): AnnIndex.Codebooks = {
+      write(base + s"/$tag/gen0")
+      Layouts.swapGenerationPointer(spark, base + s"/$tag", "gen0")
+      val index = AnnIndex(spark, base + s"/$tag")
+      val r = index.maintain(corpus, drifted, "vec_id", "embedding", trained = trained)
+      assert(r.action == "rebuild" && r.layout == base + s"/$tag/gen1", s"$tag: $r")
+      // the rebuilt generations are intact layouts: the root probe answers k rows
+      assert(index.topK(Array.fill(dim)(1.0), k = 5, nprobe = 2).count() == 5, tag)
+      index.codebooks
     }
-    val rs = Similarity.maintainIvfPq(spark, base + "/s0", corpus, drifted,
-      "vec_id", "embedding", base + "/s1")
-    val rt = Similarity.maintainIvfPq(spark, base + "/t0", corpus, drifted,
-      "vec_id", "embedding", base + "/t1", trained = true)
-    assert(rs.action == "rebuild" && rt.action == "rebuild", s"$rs $rt")
-    val (si, sp) = Similarity.readIvfPqCodebooks(spark, base + "/s1")
-    val (ti, tp) = Similarity.readIvfPqCodebooks(spark, base + "/t1")
-    val standinErr = Similarity.ivfPqDistortion(all, "embedding", si, sp,
-      residual = false)
-    val trainedErr = Similarity.ivfPqDistortion(all, "embedding", ti, tp,
-      residual = false)
+    def err(cb: AnnIndex.Codebooks): Double = cb.distortion(all, "embedding")
+    // RAW kind: one stand-in rebuild, one trained rebuild, same fixture
+    def raw(p: String): Unit = Similarity.writeIvfPqPartitioned(corpus,
+      "vec_id", "embedding", ivfCb, pqCb, p)
+    val standinErr = err(rebuilt("s", raw, trained = false))
+    val trainedErr = err(rebuilt("t", raw, trained = true))
     assert(trainedErr < standinErr,
       s"trained $trainedErr !< stand-in $standinErr")
     // RESIDUAL kind: the trained rebuild fits k-means in residual
     // space and still wins
     val rcb = Similarity.residualPqCodebooks(corpus, "vec_id", "embedding",
       ivfCb, m = 4, ks = 16)
-    Seq("rs", "rt").foreach { tag =>
-      Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
-        ivfCb, rcb, base + s"/${tag}0")
-    }
-    val rrs = Similarity.maintainIvfPq(spark, base + "/rs0", corpus, drifted,
-      "vec_id", "embedding", base + "/rs1")
-    val rrt = Similarity.maintainIvfPq(spark, base + "/rt0", corpus, drifted,
-      "vec_id", "embedding", base + "/rt1", trained = true)
-    assert(rrs.action == "rebuild" && rrt.action == "rebuild", s"$rrs $rrt")
-    val (rsi, rsp) = Similarity.readIvfPqResidualCodebooks(spark, base + "/rs1")
-    val (rti, rtp) = Similarity.readIvfPqResidualCodebooks(spark, base + "/rt1")
-    val rStandin = Similarity.ivfPqDistortion(all, "embedding", rsi, rsp,
-      residual = true)
-    val rTrained = Similarity.ivfPqDistortion(all, "embedding", rti, rtp,
-      residual = true)
+    def res(p: String): Unit = Similarity.writeIvfPqResidualPartitioned(corpus,
+      "vec_id", "embedding", ivfCb, rcb, p)
+    val rs = rebuilt("rs", res, trained = false)
+    val rt = rebuilt("rt", res, trained = true)
+    assert(rs.kind == "rpq" && rt.kind == "rpq")
+    val (rStandin, rTrained) = (err(rs), err(rt))
     assert(rTrained < rStandin, s"trained $rTrained !< stand-in $rStandin")
-    // the trained generations are intact layouts: self-contained
-    // probes answer k rows
-    val q = Array.fill(dim)(1.0)
-    assert(Similarity.ivfPqTopKFromFiles(spark, base + "/t1", "vec_id",
-      "code", q, k = 5, nprobe = 2).count() == 5)
-    assert(Similarity.ivfPqResidualTopKFromFiles(spark, base + "/rt1",
-      "vec_id", "code", q, k = 5, nprobe = 2).count() == 5)
-  }
-
-  test("batched probes: residual and increments parity with single probes, output globally ordered") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(131)
-    val dim = 16
-    val emb = (0L until 200L).map(i =>
-      (i, Array.tabulate(dim)(j => math.sin(i * 0.37 + j) + rnd.nextGaussian() * 0.1)))
-      .toDF("vec_id", "embedding")
-    val corpus = emb.where(col("vec_id") % 4 =!= 0)
-    val incr = emb.where(col("vec_id") % 4 === 0)
-    val qs = Seq(
-      1L -> Array.fill(dim)(1.0),
-      2L -> Array.fill(dim)(-1.0),
-      3L -> Array.tabulate(dim)(j => if (j % 2 == 0) 1.5 else -0.5))
-    val base = java.nio.file.Files.createTempDirectory("graft_batchkinds").toString
-    // RESIDUAL layout with a committed streamed increment
-    val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 8)
-    val rcb = Similarity.residualPqCodebooks(corpus, "vec_id", "embedding",
-      ivfCb, m = 4, ks = 16)
-    Similarity.writeIvfPqResidualPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, rcb, base + "/rlayout")
-    Similarity.appendIvfPqIncrement(incr, "vec_id", "embedding",
-      base + "/rlayout", batchId = 0L)
-    val rBatch = Similarity.ivfPqResidualTopKBatchFromFilesWithIncrements(
-      spark, base + "/rlayout", "vec_id", "code", qs, k = 7, nprobe = 3)
-      .as[(Long, Long, Double)].collect().toSeq
-    // globally ordered as promised: (query_id, adc, id)
-    assert(rBatch == rBatch.sortBy(r => (r._1, r._3, r._2)), s"$rBatch")
-    qs.foreach { case (qid, qv) =>
-      val single = Similarity.ivfPqResidualTopKFromFilesWithIncrements(
-        spark, base + "/rlayout", "vec_id", "code", qv, k = 7, nprobe = 3)
-        .as[(Long, Double)].collect().toSeq
-      val slice = rBatch.filter(_._1 == qid).map(r => (r._2, r._3))
-      assert(slice == single, s"residual query $qid: $slice vs $single")
-    }
-    // base-only residual batch face: same parity without increments
-    val rBase = Similarity.ivfPqResidualTopKBatchFromFiles(spark,
-      base + "/rlayout", "vec_id", "code", qs, k = 7, nprobe = 3)
-      .as[(Long, Long, Double)].collect().toSeq
-    qs.foreach { case (qid, qv) =>
-      val single = Similarity.ivfPqResidualTopKFromFiles(spark,
-        base + "/rlayout", "vec_id", "code", qv, k = 7, nprobe = 3)
-        .as[(Long, Double)].collect().toSeq
-      val slice = rBase.filter(_._1 == qid).map(r => (r._2, r._3))
-      assert(slice == single, s"residual base query $qid: $slice vs $single")
-    }
-    // RAW layout with a committed streamed increment
-    val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding",
-      m = 4, ks = 16)
-    Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, pqCb, base + "/player")
-    Similarity.appendIvfPqIncrement(incr, "vec_id", "embedding",
-      base + "/player", batchId = 0L)
-    val pBatch = Similarity.ivfPqTopKBatchFromFilesWithIncrements(spark,
-      base + "/player", "vec_id", "code", qs, k = 7, nprobe = 3)
-      .as[(Long, Long, Double)].collect().toSeq
-    qs.foreach { case (qid, qv) =>
-      val single = Similarity.ivfPqTopKFromFilesWithIncrements(spark,
-        base + "/player", "vec_id", "code", qv, k = 7, nprobe = 3)
-        .as[(Long, Double)].collect().toSeq
-      val slice = pBatch.filter(_._1 == qid).map(r => (r._2, r._3))
-      assert(slice == single, s"raw query $qid: $slice vs $single")
-    }
-    // the replay rule holds on the batched face too: excluding the
-    // increment's own batch id answers base-only
-    val excl = Similarity.ivfPqTopKBatchFromFilesWithIncrements(spark,
-      base + "/player", "vec_id", "code", qs, k = 7, nprobe = 3,
-      excludeBatchId = Some(0L))
-      .select("vec_id").as[Long].collect().toSet
-    assert(excl.forall(_ % 4 != 0), s"excluded batch leaked: $excl")
   }
 
   test("annRecallAtK: exact matches score 1, misses score 0, zero-hit queries kept, recall monotone in nprobe") {
@@ -2859,25 +2934,33 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // DOMINANCE (guaranteed, not statistical): every exact neighbor
     // the plain ADC top-10 found is still in the 50-shortlist, and the
     // exact re-rank always keeps it — so refined recall >= ADC recall
-    val adc = Similarity.ivfPqTopKFromFiles(spark, base + "/layout",
-      "vec_id", "code", q, k = 10, nprobe = 8)
-    val refined = Similarity.ivfPqTopKRefined(spark, base + "/layout",
-      "vec_id", "code", "embedding", q, k = 10, shortlist = 50, nprobe = 8)
+    val adc = AnnIndex(spark, base + "/layout").topK(q, k = 10, nprobe = 8)
+    val refined = AnnIndex(spark, base + "/layout")
+      .refine(q, k = 10, vecCol = "embedding", shortlist = 50, nprobe = 8)
     assert(recallOf(refined) >= recallOf(adc),
       s"refined ${recallOf(refined)} vs adc ${recallOf(adc)}")
     // a shortlist covering every probed row with every cell probed is
     // EXACT search: identical to the brute-force top-k, values included
-    val full = Similarity.ivfPqTopKRefined(spark, base + "/layout",
-      "vec_id", "code", "embedding", q, k = 10, shortlist = 200, nprobe = 8)
+    val full = AnnIndex(spark, base + "/layout")
+      .refine(q, k = 10, vecCol = "embedding", shortlist = 200, nprobe = 8)
       .as[(Long, Double)].collect().toSeq
     val truth = exact.as[(Long, Double)].collect().toSeq
     assert(full == truth, s"$full vs $truth")
     // curated refusal: a shortlist smaller than k cannot re-rank to k
     val e = intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopKRefined(spark, base + "/layout", "vec_id",
-        "code", "embedding", q, k = 10, shortlist = 5)
+      AnnIndex(spark, base + "/layout")
+        .refine(q, k = 10, vecCol = "embedding", shortlist = 5)
     }
     assert(e.getMessage.contains("shortlist"), e.getMessage)
+    // committed increments carry codes only: a re-rank that needs the
+    // kept vectors refuses curated instead of silently skipping them
+    AnnIndex(spark, base + "/layout").append(
+      emb.where(col("vec_id") < 3L).select((col("vec_id") + 1000L).as("vec_id"),
+        col("embedding")), "vec_id", "embedding", batchId = Some(0L))
+    val eIncr = intercept[IllegalArgumentException] {
+      AnnIndex(spark, base + "/layout").refine(q, k = 10, vecCol = "embedding")
+    }
+    assert(eIncr.getMessage.contains("increments"), eIncr.getMessage)
   }
 
   test("a fully-pruned drift series reads empty; prune composes into the rebuild; the root _temporary probe refuses") {
@@ -2893,20 +2976,21 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = java.nio.file.Files.createTempDirectory("graft_prunedrift").toString
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/gen0")
+    Layouts.swapGenerationPointer(spark, base, "gen0")
+    val index = AnnIndex(spark, base)
     val batches = Seq(
       sample(24, 0.0, 1000L), sample(24, 0.0, 2000L),
       sample(24, 25.0, 3000L), sample(24, 25.0, 4000L))
       .map(_.toDF("vec_id", "embedding"))
     batches.zipWithIndex.foreach { case (b, i) =>
-      StreamingSimilarity.ingestBatch(b, i.toLong, base + "/gen0",
+      StreamingSimilarity.ingestBatch(b, i.toLong, base,
         "vec_id", "embedding", Some(base + "/drift"))
     }
     val all = batches.foldLeft(corpus)(_ unionByName _)
     // prune = true: the rebuild fences AND prunes in one quiesce window
-    val r = Similarity.maintainFromDriftSeries(spark, base + "/drift",
-      base + "/gen0", all, "vec_id", "embedding", base + "/gen1",
-      window = 2, prune = true)
-    assert(r.action == "rebuild", s"$r")
+    val r = index.maintainFromDriftSeries(base + "/drift", all,
+      "vec_id", "embedding", window = 2, prune = true)
+    assert(r.action == "rebuild" && r.layout == base + "/gen1", s"$r")
     // the series is now fence-only: it reads EMPTY with the right
     // schema (the r19 ADVICE crash — an AnalysisException dressed as
     // 'drift series unreadable' — is exactly what this pins)
@@ -2914,13 +2998,12 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(series.columns.toSeq == Seq("ingest_batch", "pq_err"))
     assert(series.count() == 0)
     // and the monitor's next tick keeps with batches = 0, not a crash
-    val tick = Similarity.maintainFromDriftSeries(spark, base + "/drift",
-      base + "/gen0", all, "vec_id", "embedding", base + "/gen2",
-      window = 2)
+    val tick = index.maintainFromDriftSeries(base + "/drift", all,
+      "vec_id", "embedding", window = 2)
     assert(tick.action == "keep" && tick.batches == 0, s"$tick")
     // a fresh post-prune report is visible again
     StreamingSimilarity.ingestBatch(sample(24, 0.0, 5000L)
-      .toDF("vec_id", "embedding"), 4L, base + "/gen0",
+      .toDF("vec_id", "embedding"), 4L, base,
       "vec_id", "embedding", Some(base + "/drift"))
     assert(Similarity.readDriftSeries(spark, base + "/drift")
       .as[(Long, Double)].collect().map(_._1).toSeq == Seq(4L))
@@ -2929,24 +3012,24 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val emptyDir = base + "/nothing"
     new java.io.File(emptyDir).mkdirs()
     val eEmpty = intercept[IllegalArgumentException] {
-      Similarity.maintainFromDriftSeries(spark, emptyDir,
-        base + "/gen0", all, "vec_id", "embedding", base + "/gen3")
+      index.maintainFromDriftSeries(emptyDir, all, "vec_id", "embedding")
     }
     assert(eEmpty.getMessage.contains("no reports"), eEmpty.getMessage)
     // the quiesce handshake's second half now also covers the BATCH
     // append faces: an uncommitted write staging at the LAYOUT ROOT
     // (_temporary) refuses the compaction
-    new java.io.File(base + "/gen0/_temporary").mkdirs()
+    new java.io.File(base + "/gen1/_temporary").mkdirs()
     val eRoot = intercept[IllegalStateException] {
-      Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/genC")
+      index.compact()
     }
     assert(eRoot.getMessage.contains("layout root"), eRoot.getMessage)
     assert(!Layouts.exists(spark,
-      base + "/gen0/" + Layouts.QuiesceMarker),
+      base + "/gen1/" + Layouts.QuiesceMarker),
       "a refused compaction must release the marker")
-    new java.io.File(base + "/gen0/_temporary").delete()
-    Similarity.compactIvfPqLayout(spark, base + "/gen0", base + "/genC")
-    assert(spark.read.parquet(base + "/genC").count() == 64 + 24 * 5)
+    assert(Layouts.currentGenerationName(spark, base) == "gen1")
+    new java.io.File(base + "/gen1/_temporary").delete()
+    assert(index.compact() == base + "/gen2")
+    assert(spark.read.parquet(base + "/gen2").count() == 64 + 24 * 5)
   }
 
   test("fanOutByKey width estimate matches the planner (r22: no double planning)") {
@@ -2972,5 +3055,60 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val shuffled = spark.read.parquet(base + "/one").repartition(3)
     assert(ScanWidth.estimate(shuffled).isEmpty)
     assert(ScanWidth.estimate(docs()).isEmpty)
+    // shapes the split replay does not model decline too. A
+    // hive-partitioned relation: the unpruned listing matches the
+    // planner only while no Filter can prune partitions
+    (0L until 400L).map(i => (i, i % 4, ("p" + i) * 30)).toDF("doc_id", "p", "text")
+      .repartition(3).write.partitionBy("p").parquet(base + "/parted")
+    val parted = spark.read.parquet(base + "/parted")
+    assert(ScanWidth.estimate(parted).contains(parted.rdd.getNumPartitions))
+    assert(ScanWidth.estimate(parted.where(col("p") === 1L)).isEmpty)
+    // a bucketed relation plans one partition per bucket, not per split
+    spark.sql("DROP TABLE IF EXISTS scanwidth_bucketed")
+    try {
+      (0L until 200L).map(i => (i, s"t$i")).toDF("doc_id", "text")
+        .write.bucketBy(4, "doc_id").saveAsTable("scanwidth_bucketed")
+      assert(ScanWidth.estimate(spark.table("scanwidth_bucketed")).isEmpty)
+    } finally spark.sql("DROP TABLE IF EXISTS scanwidth_bucketed")
+    // a non-positive split size cannot step the planner's split loop:
+    // decline while the frame is being built instead of throwing
+    val maxPart = "spark.sql.files.maxPartitionBytes"
+    val savedMaxPart = spark.conf.getOption(maxPart)
+    spark.conf.set(maxPart, "0")
+    try assert(ScanWidth.estimate(spark.read.parquet(base + "/many")).isEmpty)
+    finally savedMaxPart match {
+      case Some(v) => spark.conf.set(maxPart, v)
+      case None => spark.conf.unset(maxPart)
+    }
+  }
+
+  test("a checkpointed frame the optimizer underestimates is never broadcast") {
+    import org.apache.spark.sql.graft.CheckpointShims
+    import spark.implicits._
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, (1L << 20).toString)
+    try {
+      // 20 rows exploded into 200k: the optimizer sizes the explode by
+      // its 20-row input, far under the 1 MB threshold
+      val exploded = (0L until 20L).toDF("k")
+        .select(explode(sequence(lit(1L), lit(10000L))).as("id"), col("k"))
+      assert(exploded.queryExecution.optimizedPlan.stats.sizeInBytes < (1L << 20))
+      val ckpt = CheckpointShims.localCheckpointPartitioned(exploded)
+      val size = ckpt.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(size > (1L << 20), s"checkpointed size $size")
+      // the probe side is itself past the threshold: only a
+      // (mis)sized checkpoint could be the broadcast side
+      val other = spark.range(0L, 1000000L).toDF("id")
+      val plan = other.join(ckpt, "id").queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastHashJoin"), s"underestimate broadcast:\n$plan")
+      // control: a frame that really is small still broadcasts
+      val small = CheckpointShims.localCheckpointPartitioned((0L until 20L).toDF("id"))
+      val smallPlan = other.join(small, "id").queryExecution.executedPlan.toString
+      assert(smallPlan.contains("BroadcastHashJoin"), smallPlan)
+    } finally saved match {
+      case Some(v) => spark.conf.set(threshold, v)
+      case None => spark.conf.unset(threshold)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Dedup, Sampling, Similarity}
+import graft.ops.{AnnIndex, Dedup, Layouts, Sampling, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -370,9 +370,8 @@ object ScaleEvidence {
     exact.count()
     val curve = Seq(1, 2, 4, 8, 16).map { np =>
       val t0 = System.nanoTime()
-      val ap = Similarity.ivfPqTopKBatchFromFiles(spark,
-        layout.getAbsolutePath, "vec_id", "code", queries, k = 10,
-        nprobe = np)
+      val ap = AnnIndex(spark, layout.getAbsolutePath).topK(queries, k = 10,
+        nprobe = np, excludeBatchId = None)
       val recall = Similarity.annRecallAtK(exact,
         ap.select(col("query_id").as("qid"), col("vec_id")),
         "qid", "vec_id", k = 10)
@@ -497,19 +496,19 @@ object ScaleEvidence {
     val tW = System.nanoTime()
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, layout)
+    Layouts.swapGenerationPointer(spark, base.getAbsolutePath, "gen0")
+    val index = AnnIndex(spark, base.getAbsolutePath)
     val writeSecs = (System.nanoTime() - tW) / 1e9
     // in-distribution batch: the steady-state path — no corpus read
     val tA = System.nanoTime()
-    val ra = Similarity.maintainIvfPq(spark, layout, corpus,
-      vecsOf(batchN, 10000000L, 0.0), "vec_id", "embedding",
-      base.getAbsolutePath + "/unused")
+    val ra = index.maintain(corpus, vecsOf(batchN, 10000000L, 0.0),
+      "vec_id", "embedding")
     val appendSecs = (System.nanoTime() - tA) / 1e9
     require(ra.action == "append", s"in-distribution batch must append: $ra")
     // drifted batch: the retrain the drift signal demanded
     val tR = System.nanoTime()
-    val rb = Similarity.maintainIvfPq(spark, layout, corpus,
-      vecsOf(batchN, 20000000L, 8.0), "vec_id", "embedding",
-      base.getAbsolutePath + "/gen1")
+    val rb = index.maintain(corpus, vecsOf(batchN, 20000000L, 8.0),
+      "vec_id", "embedding")
     val rebuildSecs = (System.nanoTime() - tR) / 1e9
     require(rb.action == "rebuild", s"drifted batch must rebuild: $rb")
     val nFinal = spark.read.parquet(base.getAbsolutePath + "/gen1").count()
@@ -521,7 +520,7 @@ object ScaleEvidence {
 
   /** ANN LSM rung (`annlsm:<corpusN>:<nBatches>`): the small-files
     * tax measured — a probe over base + `nBatches` streamed increment
-    * directories vs the same probe after [[Similarity.compactIvfPqLayout]]
+    * directories vs the same probe after [[AnnIndex.compact]]
     * folds them into one generation. Identical answers asserted; the
     * wall gap is the per-probe listing/open cost a year of daily
     * ingest accumulates and one compaction pays down.
@@ -550,11 +549,12 @@ object ScaleEvidence {
     val layout = base.getAbsolutePath + "/gen0"
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, layout)
+    Layouts.swapGenerationPointer(spark, base.getAbsolutePath, "gen0")
+    val index = AnnIndex(spark, base.getAbsolutePath)
     val batchN = math.max(64L, corpusN / 50)
     (0 until nBatches).foreach { b =>
-      Similarity.appendIvfPqIncrement(
-        vecsOf(batchN, 10000000L + b * batchN), "vec_id", "embedding",
-        layout, b.toLong)
+      index.append(vecsOf(batchN, 10000000L + b * batchN), "vec_id",
+        "embedding", batchId = Some(b.toLong))
     }
     val query = centers(5).map(_ + 0.001)
     def timed[T](f: => T): (T, Double) = {
@@ -563,17 +563,12 @@ object ScaleEvidence {
       (r, (System.nanoTime() - t0) / 1e9)
     }
     val (viaIncr, incrSecs) = timed {
-      Similarity.ivfPqTopKFromFilesWithIncrements(spark, layout,
-        "vec_id", "code", query, k = 10, nprobe = 4)
+      index.topK(query, k = 10, nprobe = 4)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     }
-    val (_, compactSecs) = timed {
-      Similarity.compactIvfPqLayout(spark, layout,
-        base.getAbsolutePath + "/gen1")
-    }
+    val (_, compactSecs) = timed(index.compact())
     val (viaCompacted, compactedSecs) = timed {
-      Similarity.ivfPqTopKFromFiles(spark, base.getAbsolutePath + "/gen1",
-        "vec_id", "code", query, k = 10, nprobe = 4)
+      index.topK(query, k = 10, nprobe = 4)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     }
     org.apache.commons.io.FileUtils.deleteQuietly(base)
@@ -584,7 +579,7 @@ object ScaleEvidence {
 
   /** Monitor rung (`monitor:<corpusN>:<nBatches>`): the composed
     * maintenance loop's cost split measured
-    * ([[Similarity.maintainFromDriftSeries]], q159). KEEP path: reads
+    * ([[AnnIndex.maintainFromDriftSeries]], q159). KEEP path: reads
     * one KB-sized drift row per batch ever ingested — never the data;
     * its wall cost must stay flat in corpus size. REBUILD path: the
     * corpus-wide retrain + rewrite, paid exactly once, when the
@@ -616,11 +611,13 @@ object ScaleEvidence {
     val drift = base.getAbsolutePath + "/drift"
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, layout)
+    Layouts.swapGenerationPointer(spark, base.getAbsolutePath, "gen0")
+    val index = AnnIndex(spark, base.getAbsolutePath)
     val batchN = math.max(64L, corpusN / 50)
     (0 until nBatches).foreach { b =>
       graft.streaming.StreamingSimilarity.ingestBatch(
         vecsOf(batchN, 10000000L + b * batchN, 0.0), b.toLong,
-        layout, "vec_id", "embedding", Some(drift))
+        base.getAbsolutePath, "vec_id", "embedding", Some(drift))
     }
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime()
@@ -629,31 +626,31 @@ object ScaleEvidence {
     }
     // keep path: an in-distribution series — the monitor's steady state
     val (rKeep, keepSecs) = timed {
-      Similarity.maintainFromDriftSeries(spark, drift, layout, corpus,
-        "vec_id", "embedding", base.getAbsolutePath + "/gen1", window = 3)
+      index.maintainFromDriftSeries(drift, corpus, "vec_id", "embedding",
+        window = 3)
     }
     require(rKeep.action == "keep", s"expected keep, got $rKeep")
     // three drifted batches fill the trailing window -> one rebuild
     (0 until 3).foreach { b =>
       graft.streaming.StreamingSimilarity.ingestBatch(
         vecsOf(batchN, 20000000L + b * batchN, 8.0), (nBatches + b).toLong,
-        layout, "vec_id", "embedding", Some(drift))
+        base.getAbsolutePath, "vec_id", "embedding", Some(drift))
     }
     val all = corpus // the retrain corpus: pre-drift vectors (system of record)
     val (rReb, rebSecs) = timed {
-      Similarity.maintainFromDriftSeries(spark, drift, layout, all,
-        "vec_id", "embedding", base.getAbsolutePath + "/gen1", window = 3)
+      index.maintainFromDriftSeries(drift, all, "vec_id", "embedding",
+        window = 3)
     }
     require(rReb.action == "rebuild", s"expected rebuild, got $rReb")
-    // probe parity across the swap: gen1 answers for the corpus it
-    // re-encoded (same deterministic codebooks -> same top-k as gen0's
-    // base scan, which holds exactly the same corpus rows)
+    // probe parity across the swap: the root now answers from gen1,
+    // which re-encoded the corpus under the same deterministic
+    // codebooks -> the in-flight top-k over exactly those rows
     val query = centers(5).map(_ + 0.001)
-    val viaNew = Similarity.ivfPqTopKFromFiles(spark,
-      base.getAbsolutePath + "/gen1", "vec_id", "code", query, k = 10, nprobe = 4)
+    val viaNew = index.topK(query, k = 10, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val viaOldBase = Similarity.ivfPqTopKFromFiles(spark, layout,
-      "vec_id", "code", query, k = 10, nprobe = 4)
+    val viaOldBase = Similarity.ivfPqTopK(corpus, "vec_id", "embedding",
+      query, k = 10, nlist = nCenters, nprobe = 4, m = 8, ks = 16,
+      ivfCb = Some(ivfCb), pqCb = Some(pqCb))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     org.apache.commons.io.FileUtils.deleteQuietly(base)
     require(viaNew == viaOldBase,

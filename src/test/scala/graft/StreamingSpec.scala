@@ -409,7 +409,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming ANN ingest: stored-codebook appends, restart resumes, drift reported, replay converges") {
     import spark.implicits._
-    import graft.ops.Similarity
+    import graft.ops.{AnnIndex, Layouts, Similarity}
     import graft.streaming.StreamingSimilarity
     val base = tmp("graft_sann").getAbsolutePath
     val dim = 16
@@ -422,8 +422,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corpus = vecs(40, 0L, 0.0).toDF("vec_id", "embedding")
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 4)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 4, ks = 8)
+    // a pointered store: the stream addresses the root, gen0 holds the
+    // corpus and (below) the streamed increments
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, pqCb, base + "/layout")
+      ivfCb, pqCb, base + "/layout/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/layout", "gen0")
+    val index = AnnIndex(spark, base + "/layout")
     val srcDir = new java.io.File(base + "/src"); srcDir.mkdirs()
     def stage(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
       val tmpd = new java.io.File(base + s"/stage$n")
@@ -444,35 +448,32 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     stage(vecs(10, 100L, 0.0).toDF("vec_id", "embedding"), 1)
     runStream()
     // the batch landed in its own increment directory: plain reads of
-    // the layout stay base-only, the increments face sees 40 + 10
-    assert(spark.read.parquet(base + "/layout").count() == 40)
-    val ids1 = Similarity.ivfPqTopKFromFilesWithIncrements(spark,
-      base + "/layout", "vec_id", "code", query, k = 50, nprobe = 4)
+    // the layout stay base-only, the probe sees 40 + 10
+    assert(spark.read.parquet(base + "/layout/gen0").count() == 40)
+    val ids1 = index.topK(query, k = 50, nprobe = 4)
       .select("vec_id").as[Long].collect().toSet
     assert(ids1.exists(_ >= 100L), s"batch 1 invisible to the probe: $ids1")
     // restart from the same checkpoint: batch 1 NOT reprocessed, the
     // shifted batch 2 appends and its drift report lands per batch
     stage(vecs(10, 200L, 6.0).toDF("vec_id", "embedding"), 2)
     runStream()
-    val counted = graft.ops.Layouts.withIncrements(spark,
-      spark.read.parquet(base + "/layout"), base + "/layout",
+    val counted = Layouts.withIncrements(spark,
+      spark.read.parquet(base + "/layout/gen0"), base + "/layout/gen0",
       Seq("vec_id", "cell", "code"), None)
     assert(counted.count() == 60)
     assert(counted.select("vec_id").distinct().count() == 60)
-    val atRest = Similarity.ivfPqTopKFromFilesWithIncrements(spark,
-      base + "/layout", "vec_id", "code", query, k = 8, nprobe = 4)
+    val atRest = index.topK(query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     // batch parity: the SAME two batches through the batch face
-    // (appendIvfPq into a parallel generation) answer identically —
-    // stream and batch ingest are the same operator
+    // (appended into a parallel layout's cell directories) answer
+    // identically — stream and batch ingest are the same operator
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
       ivfCb, pqCb, base + "/par")
-    Similarity.appendIvfPq(vecs(10, 100L, 0.0).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", ivfCb, pqCb, base + "/par")
-    Similarity.appendIvfPq(vecs(10, 200L, 6.0).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", ivfCb, pqCb, base + "/par")
-    val viaBatchFace = Similarity.ivfPqTopKFromFiles(spark, base + "/par",
-      "vec_id", "code", query, k = 8, nprobe = 4)
+    AnnIndex(spark, base + "/par").append(vecs(10, 100L, 0.0)
+      .toDF("vec_id", "embedding"), "vec_id", "embedding")
+    AnnIndex(spark, base + "/par").append(vecs(10, 200L, 6.0)
+      .toDF("vec_id", "embedding"), "vec_id", "embedding")
+    val viaBatchFace = AnnIndex(spark, base + "/par").topK(query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     assert(viaBatchFace == atRest, s"$viaBatchFace vs $atRest")
     // drift: one row per batch via the partition column; the shifted
@@ -487,20 +488,18 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     StreamingSimilarity.ingestBatch(
       vecs(10, 100L, 0.0).toDF("vec_id", "embedding"), 0L,
       base + "/layout", "vec_id", "embedding", Some(base + "/drift"))
-    val again = Similarity.ivfPqTopKFromFilesWithIncrements(spark,
-      base + "/layout", "vec_id", "code", query, k = 8, nprobe = 4)
+    val again = index.topK(query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
-    val replayed = graft.ops.Layouts.withIncrements(spark,
-      spark.read.parquet(base + "/layout"), base + "/layout",
+    val replayed = Layouts.withIncrements(spark,
+      spark.read.parquet(base + "/layout/gen0"), base + "/layout/gen0",
       Seq("vec_id", "cell", "code"), None)
     assert(replayed.count() == 60)
     assert(replayed.select("vec_id").distinct().count() == 60)
     // compaction folds the streamed increments into the next base
     // generation (quiesced stream), sidecar carried
-    Similarity.compactIvfPqLayout(spark, base + "/layout", base + "/gen1")
-    assert(spark.read.parquet(base + "/gen1").count() == 60)
-    val compacted = Similarity.ivfPqTopKFromFiles(spark, base + "/gen1",
-      "vec_id", "code", query, k = 8, nprobe = 4)
+    assert(index.compact() == base + "/layout/gen1")
+    assert(spark.read.parquet(base + "/layout/gen1").count() == 60)
+    val compacted = index.topK(query, k = 8, nprobe = 4)
       .as[(Long, Double)].collect().toSeq
     assert(compacted == atRest, s"$compacted vs $atRest")
     assert(again == atRest, s"$again vs $atRest")
@@ -560,7 +559,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("quiesce guard: appends refuse mid-compaction and resume after, both families") {
     import spark.implicits._
-    import graft.ops.{Dedup, Layouts, Similarity}
+    import graft.ops.{AnnIndex, Dedup, Layouts, Similarity}
     import graft.streaming.{StreamingDedup, StreamingSimilarity}
     val base = tmp("graft_quiesce").getAbsolutePath
     // --- ANN family ---
@@ -572,46 +571,52 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ivfCb = Similarity.ivfCodebook(corpus, "vec_id", "embedding", nlist = 2)
     val pqCb = Similarity.pqCodebooks(corpus, "vec_id", "embedding", m = 2, ks = 4)
     Similarity.writeIvfPqPartitioned(corpus, "vec_id", "embedding",
-      ivfCb, pqCb, base + "/ann")
+      ivfCb, pqCb, base + "/ann/gen0")
+    Layouts.swapGenerationPointer(spark, base + "/ann", "gen0")
+    val index = AnnIndex(spark, base + "/ann")
     val batch = vecs(5, 100L).toDF("vec_id", "embedding")
     // a held marker makes every append face refuse, curated
-    Layouts.acquireQuiesce(spark, base + "/ann", "test")
+    Layouts.acquireQuiesce(spark, base + "/ann/gen0", "test")
     val e1 = intercept[IllegalStateException] {
       StreamingSimilarity.ingestBatch(batch, 0L, base + "/ann",
         "vec_id", "embedding", None)
     }
     assert(e1.getMessage.contains(Layouts.QuiesceMarker), e1.getMessage)
     val e2 = intercept[IllegalStateException] {
-      Similarity.appendIvfPq(batch, "vec_id", "embedding", ivfCb, pqCb,
-        base + "/ann")
+      index.append(batch, "vec_id", "embedding")
     }
     assert(e2.getMessage.contains(Layouts.QuiesceMarker), e2.getMessage)
     // a second compaction cannot take a held marker (no double-fold)
     val e3 = intercept[IllegalStateException] {
-      Layouts.acquireQuiesce(spark, base + "/ann", "second")
+      Layouts.acquireQuiesce(spark, base + "/ann/gen0", "second")
     }
     assert(e3.getMessage.contains("already holds"), e3.getMessage)
+    val e6 = intercept[IllegalStateException] {
+      index.compact()
+    }
+    assert(e6.getMessage.contains("already holds"), e6.getMessage)
     // released -> the failed batch replays cleanly
-    Layouts.releaseQuiesce(spark, base + "/ann")
+    Layouts.releaseQuiesce(spark, base + "/ann/gen0")
     StreamingSimilarity.ingestBatch(batch, 0L, base + "/ann",
       "vec_id", "embedding", None)
     // the real compactor takes and releases the marker around the fold
-    Similarity.compactIvfPqLayout(spark, base + "/ann", base + "/ann_g1")
-    assert(!Layouts.exists(spark, base + "/ann/" + Layouts.QuiesceMarker))
-    assert(spark.read.parquet(base + "/ann_g1").count() == 25)
+    assert(index.compact() == base + "/ann/gen1")
+    assert(!Layouts.exists(spark, base + "/ann/gen0/" + Layouts.QuiesceMarker))
+    assert(spark.read.parquet(base + "/ann/gen1").count() == 25)
     // the in-flight handshake: an increment directory holding an
     // uncommitted write (Spark's _temporary staging) refuses the fold
     // even though the marker was free — folding a half-written batch
     // is silent data loss; the marker is still released on the refusal
     val inflight = new java.io.File(
-      base + "/ann/_increments/ingest_batch=99/_temporary")
+      base + "/ann/gen1/_increments/ingest_batch=99/_temporary")
     assert(inflight.mkdirs())
     val e7 = intercept[IllegalStateException] {
-      Similarity.compactIvfPqLayout(spark, base + "/ann", base + "/ann_g2")
+      index.compact()
     }
     assert(e7.getMessage.contains("_temporary"), e7.getMessage)
-    assert(!Layouts.exists(spark, base + "/ann/" + Layouts.QuiesceMarker))
-    graft.ops.Layouts.delete(spark, base + "/ann/_increments/ingest_batch=99")
+    assert(!Layouts.exists(spark, base + "/ann/gen1/" + Layouts.QuiesceMarker))
+    assert(Layouts.currentGenerationName(spark, base + "/ann") == "gen1")
+    Layouts.delete(spark, base + "/ann/gen1/_increments/ingest_batch=99")
     // --- near-dup family ---
     val docs = Seq((10L, "the quick brown fox jumps over the lazy dog today"),
       (11L, "completely unrelated corpus text nothing shared here at all"))
@@ -677,7 +682,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("pointered drift monitor: swap inside the quiesce window, fence-without-swap recovery, stream follows the pointer") {
     import spark.implicits._
-    import graft.ops.{Layouts, Similarity}
+    import graft.ops.{AnnIndex, Layouts, Similarity}
     import graft.streaming.StreamingSimilarity
     val rnd = new scala.util.Random(23)
     val dim = 16
@@ -710,8 +715,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = batches.foldLeft(corpus)(_ unionByName _)
     // the drifted trailing window rebuilds into gen1; the POINTER is
     // swapped inside the quiesce window and the marker released after
-    val r = Similarity.maintainPointedFromDriftSeries(spark, root,
-      root + "/drift", all, "vec_id", "embedding", window = 2)
+    val index = AnnIndex(spark, root)
+    val r = index.maintainFromDriftSeries(root + "/drift", all,
+      "vec_id", "embedding", window = 2)
     assert(r.action == "rebuild" && r.layout == root + "/gen1", s"$r")
     assert(Layouts.currentGenerationName(spark, root) == "gen1")
     assert(!Layouts.exists(spark, root + "/gen0/" + Layouts.QuiesceMarker))
@@ -720,8 +726,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = Array.fill(dim)(1.0)
     val newIvf = Similarity.ivfCodebook(all, "vec_id", "embedding", nlist = 4)
     val newPq = Similarity.pqCodebooks(all, "vec_id", "embedding", m = 4, ks = 16)
-    val atRoot = Similarity.ivfPqTopKFromFiles(spark, root, "vec_id", "code",
-      q, k = 8, nprobe = 2).as[(Long, Double)].collect().toSeq
+    val atRoot = index.topK(q, k = 8, nprobe = 2).as[(Long, Double)].collect().toSeq
     val inFlight = Similarity.ivfPqTopK(all, "vec_id", "embedding", q,
       k = 8, nlist = 4, nprobe = 2, m = 4, ks = 16,
       ivfCb = Some(newIvf), pqCb = Some(newPq))
@@ -733,8 +738,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // exactly that state, then let the next monitor tick recover.
     Layouts.swapGenerationPointer(spark, root, "gen0")
     Layouts.acquireQuiesce(spark, root + "/gen0", "crashed-rebuild")
-    val rec = Similarity.maintainPointedFromDriftSeries(spark, root,
-      root + "/drift", all, "vec_id", "embedding", window = 2)
+    val rec = index.maintainFromDriftSeries(root + "/drift", all,
+      "vec_id", "embedding", window = 2)
     assert(rec.action == "swap" && rec.layout == root + "/gen1", s"$rec")
     assert(Layouts.currentGenerationName(spark, root) == "gen1")
     assert(!Layouts.exists(spark, root + "/gen0/" + Layouts.QuiesceMarker),
@@ -748,8 +753,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       Some(root + "/drift"))
     assert(Layouts.exists(spark,
       root + "/gen1/_increments/ingest_batch=4"))
-    val tick = Similarity.maintainPointedFromDriftSeries(spark, root,
-      root + "/drift", all, "vec_id", "embedding", window = 2)
+    val tick = index.maintainFromDriftSeries(root + "/drift", all,
+      "vec_id", "embedding", window = 2)
     assert(tick.action == "keep" && tick.batches == 1, s"$tick")
     // the post-write pointer fence: a batch whose generation pointer
     // moved while it was encoding (here: a stale resolved layout) must
@@ -773,35 +778,31 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // probe after (the fold preserves every row), the next stream
     // batch lands in gen2, and vacuum reclaims both superseded
     // generations
-    val beforeFold = Similarity.ivfPqTopKFromFilesWithIncrements(spark,
-      root, "vec_id", "code", q, k = 8, nprobe = 2)
+    val beforeFold = index.topK(q, k = 8, nprobe = 2)
       .as[(Long, Double)].collect().toSeq
-    val gen2 = Similarity.compactPointedIvfPqLayout(spark, root,
-      idCol = "vec_id")
+    val gen2 = index.compact()
     assert(gen2 == root + "/gen2", gen2)
     assert(Layouts.currentGenerationName(spark, root) == "gen2")
     assert(!Layouts.exists(spark, root + "/gen1/" + Layouts.QuiesceMarker))
-    val afterFold = Similarity.ivfPqTopKFromFiles(spark, root, "vec_id",
-      "code", q, k = 8, nprobe = 2).as[(Long, Double)].collect().toSeq
+    val afterFold = index.topK(q, k = 8, nprobe = 2).as[(Long, Double)].collect().toSeq
     assert(afterFold == beforeFold, s"$afterFold vs $beforeFold")
     StreamingSimilarity.ingestBatch(sample(24, 0.0, 7000L)
       .toDF("vec_id", "embedding"), 6L, root, "vec_id", "embedding", None)
     assert(Layouts.exists(spark, root + "/gen2/_increments/ingest_batch=6"))
     assert(Layouts.vacuumGenerations(spark, root, keep = 1) ==
       Seq("gen0", "gen1"))
-    assert(Similarity.ivfPqTopKFromFiles(spark, root, "vec_id", "code",
-      q, k = 8, nprobe = 2).count() == 8)
+    assert(AnnIndex(spark, root).topK(q, k = 8, nprobe = 2).count() == 8)
   }
 
   test("pointered monitor recovery is FORWARD-ONLY: a pointer advanced past the fence is never swapped backward") {
-    // r20 ADVICE (high): compactPointedIvfPqLayout / maintainPointedIvfPq
+    // r20 ADVICE (high): AnnIndex.compact / AnnIndex.maintain
     // swap _current without touching the drift fence, so after a
     // compaction the fence names a generation BEHIND the pointer (and
     // still on disk, pre-vacuum). Treating that as an interrupted
     // fence->swap window would point the store BACK at the superseded
     // generation — resurrecting rows the compaction retired.
     import spark.implicits._
-    import graft.ops.{Layouts, Similarity}
+    import graft.ops.{AnnIndex, Layouts, Similarity}
     import graft.streaming.StreamingSimilarity
     val rnd = new scala.util.Random(29)
     val dim = 16
@@ -827,20 +828,20 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         "vec_id", "embedding", Some(root + "/drift"))
     }
     val all = batches.foldLeft(corpus)(_ unionByName _)
-    val r = Similarity.maintainPointedFromDriftSeries(spark, root,
-      root + "/drift", all, "vec_id", "embedding", window = 2)
+    val index = AnnIndex(spark, root)
+    val r = index.maintainFromDriftSeries(root + "/drift", all,
+      "vec_id", "embedding", window = 2)
     assert(r.action == "rebuild" && r.layout == root + "/gen1", s"$r")
     // a pointered COMPACTION advances the pointer to gen2; the fence
     // still names gen1, which is still on disk (no vacuum yet)
-    val gen2 = Similarity.compactPointedIvfPqLayout(spark, root,
-      idCol = "vec_id")
+    val gen2 = index.compact()
     assert(gen2 == root + "/gen2" &&
       Layouts.currentGenerationName(spark, root) == "gen2")
     // the next monitor tick must NOT read fence(gen1) != pointer(gen2)
     // as an interrupted swap: the pointer stays on gen2 and the tick is
     // a plain keep over the (fully fenced) series
-    val tick = Similarity.maintainPointedFromDriftSeries(spark, root,
-      root + "/drift", all, "vec_id", "embedding", window = 2)
+    val tick = index.maintainFromDriftSeries(root + "/drift", all,
+      "vec_id", "embedding", window = 2)
     assert(tick.action != "swap", s"backward swap: $tick")
     assert(Layouts.currentGenerationName(spark, root) == "gen2",
       "the pointer must never move backward onto a superseded generation")
